@@ -26,18 +26,16 @@ object Pipeline {
     *
     * `atScale = false` (default) uses the dimension-fixture fast paths:
     * sameAs is an in-memory Seq (dimension-sized by definition), so C3
-    * runs as driver union-find, C4 as a literal-map expression and M7 as a
-    * literal-map lookup — zero extra Spark jobs. `atScale = true` swaps in
-    * the corpus-scale operator variants — distributed large-star/small-star
-    * connected components, join-based canonical remap, broadcast-join
-    * predicate mapping — for open-world entity vocabularies where none of
-    * those fit on the driver. Both variants emit the identical triple set
-    * and both are verified against the same DuckDB oracle
+    * runs as driver union-find and C4 as a literal-map expression — zero
+    * extra Spark jobs. `atScale = true` swaps in the corpus-scale operator
+    * variants — distributed large-star/small-star connected components
+    * and join-based canonical remap — for open-world entity vocabularies
+    * that do not fit on the driver. Both variants emit the identical
+    * triple set and both are verified against the same DuckDB oracle
     * (`triples_final` / `triples_dist_cc`). */
   def triples(spark: SparkSession, docs: Dataset[Doc],
       gazetteer: Seq[GazEntry] = Spec.Gazetteer,
       sameAs: Seq[SameAsEdge] = Spec.SameAs,
-      observeMetrics: Boolean = false,
       atScale: Boolean = false): DataFrame = {
     import spark.implicits._
 
@@ -67,7 +65,7 @@ object Pipeline {
         (remapped, entUriDim(spark, gazetteer, canonMap))
       }
 
-    assemble(spark, exploded, canon, entUris, atScale, observeMetrics)
+    assemble(spark, exploded, canon, entUris)
   }
 
   /** Canonical entity-URI dimension minted from the GAZETTEER vocabulary,
@@ -105,36 +103,23 @@ object Pipeline {
     * (entity_id, canonical) — used by the streaming shim, whose
     * incremental CC state table already IS the converged map for all
     * edges seen so far ([[graft.streaming.DocStream]]). Always the
-    * at-scale operator shapes (join remap, broadcast-join predicates):
-    * a cross-batch entity vocabulary is open-world by construction. */
+    * at-scale join remap: a cross-batch entity vocabulary is open-world
+    * by construction. */
   def triplesWithComponents(spark: SparkSession, docs: Dataset[Doc],
       components: DataFrame,
-      gazetteer: Seq[GazEntry] = Spec.Gazetteer,
-      observeMetrics: Boolean = false): DataFrame = {
+      gazetteer: Seq[GazEntry] = Spec.Gazetteer): DataFrame = {
     val exploded = SpanOps.wellFormed(SpanOps.explodeSpans(docs))
     val cands = GazetteerMatcher.candidates(spark,
       SpanOps.textSpans(exploded), gazetteer)
     val canon = Canonicalizer.remap(Linker.top1(cands), "entity_id",
       components)
     assemble(spark, exploded, canon,
-      entUriDimFromComponents(spark, gazetteer, components),
-      atScale = true, observeMetrics)
+      entUriDimFromComponents(spark, gazetteer, components))
   }
 
   /** Shared tail of both entry points: dedup → triple assembly → union. */
   private def assemble(spark: SparkSession, exploded: DataFrame,
-      canon: DataFrame, entUriDim: DataFrame, atScale: Boolean,
-      observeMetrics: Boolean): DataFrame = {
-    import spark.implicits._
-
-    // M7 predicate mapping: literal-map expression on the fast path,
-    // broadcast-join against the predicate dimension on the at-scale path.
-    val mapPreds: DataFrame => DataFrame =
-      if (atScale) {
-        val predMap = Spec.PredicateMap.toSeq.toDF("link_kind", "pred")
-        df => Linker.mapPredicatesJoin(spark, df, predMap)
-      } else df => Linker.mapPredicates(spark, df)
-
+      canon: DataFrame, entUriDim: DataFrame): DataFrame = {
     // G4 dedup happens BEFORE URI minting on the narrow natural keys —
     // far cheaper than deduping full minted-URI strings. The single
     // distinct collapses per-doc mention repetition (map-side combine) in
@@ -164,13 +149,15 @@ object Pipeline {
     // open-world entity vocabularies.
     val entUris = broadcast(entUriDim)
 
-    val mentionTriples = mapPreds(mentions.join(entUris, "entity_id"))
+    val mentionTriples =
+      Linker.mapPredicates(spark, mentions.join(entUris, "entity_id"))
       .select(Spec.docUriCol(col("doc_id")).as("subj"), col("pred"),
         col("ent_uri").as("obj"), lit("iri").as("obj_type"))
-    val labelTriples = mapPreds(labels.join(entUris, "entity_id"))
+    val labelTriples =
+      Linker.mapPredicates(spark, labels.join(entUris, "entity_id"))
       .select(col("ent_uri").as("subj"), col("pred"),
         col("surface").as("obj"), lit("literal").as("obj_type"))
-    val mediaTriples = mapPreds(media)
+    val mediaTriples = Linker.mapPredicates(spark, media)
       .select(Spec.docUriCol(col("doc_id")).as("subj"), col("pred"),
         Spec.mediaUriCol(col("entity_id")).as("obj"),
         lit("iri").as("obj_type"))
@@ -178,16 +165,8 @@ object Pipeline {
     // Each branch is internally distinct and the three predicates are
     // disjoint, so the union IS the deduped (subj, pred, obj) set — no
     // final corpus-wide dropDuplicates shuffle needed (exact set
-    // semantics, BASELINE.json:2).
-    val deduped = mentionTriples.unionByName(labelTriples)
-      .unionByName(mediaTriples)
-    // observe() is opt-in: a CollectMetrics node upstream of further plan
-    // composition (exceptAll, streaming foreachBatch) mis-binds attributes
-    // in GenerateExec on Spark 4.1 — enable it only when the returned df
-    // is consumed directly (e.g. straight into an action or write).
-    // Row-count lineage is independently recorded by the sink manifest.
-    if (observeMetrics)
-      deduped.observe("graft_triples", count(lit(1)).as("triples_out"))
-    else deduped
+    // semantics, BASELINE.json:2). No observe(): upstream of further
+    // composition it mis-binds attributes in GenerateExec on Spark 4.1.
+    mentionTriples.unionByName(labelTriples).unionByName(mediaTriples)
   }
 }

@@ -60,8 +60,8 @@ object Curation {
     // and n_tokens are pure projections of the text column — computed
     // INLINE via the shared TextAnalysis.qualityExprs builders, not
     // self-joined from qualityScore's output — and the language argmax
-    // joins once via langBest with the same CJK/'und' CASE langId
-    // applies. Values are bit-identical by construction (shared column
+    // joins once via langBest, decided by the TextAnalysis.langCase that
+    // langId uses. Values are bit-identical by construction (shared column
     // builders on both sides), and the chain's per-doc frame now costs a
     // single left join against the dimension-sized profile-hit argmax.
     val (nToks, _, quality) = TextAnalysis.qualityExprs(col(textCol))
@@ -71,8 +71,7 @@ object Curation {
       .join(TextAnalysis.langBest(spark, docs, idCol, textCol),
         Seq("id"), "left")
       .select(col("id"), col("text"),
-        when(col("text").rlike("[一-鿿]"), lit("zh"))
-          .otherwise(coalesce(col("lang"), lit("und"))).as("lang_id"),
+        TextAnalysis.langCase(col("text"), col("lang")).as("lang_id"),
         col("quality"), col("n_tokens"))
     val base =
       all.filter(col("lang_id") === keepLang && col("quality") >= minQuality)

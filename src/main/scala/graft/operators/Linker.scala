@@ -51,18 +51,13 @@ object Linker {
       col("media_ref"))
 
   /** M7: link kind → predicate IRI (BASELINE.json:6 "predicate mapping").
-    * The map is a frozen constant, so it is applied as a literal map()
-    * lookup — pure expression, zero broadcast jobs (SURVEY.md M7 names
-    * both forms; the broadcast-join variant below exists for maps that
-    * are data, not constants). Input must carry a `link_kind` column. */
+    * The map is the frozen 3-entry [[Spec.PredicateMap]] at every scale,
+    * so every pipeline path applies it as a literal map() lookup — pure
+    * expression, zero broadcast jobs. Input must carry a `link_kind`
+    * column. */
   def mapPredicates(spark: SparkSession, links: DataFrame): DataFrame = {
     val m = map(Spec.PredicateMap.toSeq
       .flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
     links.withColumn("pred", element_at(m, col("link_kind")))
   }
-
-  /** M7 variant for predicate maps that arrive as data: broadcast join. */
-  def mapPredicatesJoin(spark: SparkSession, links: DataFrame,
-      predMap: DataFrame): DataFrame =
-    links.join(broadcast(predMap), Seq("link_kind"), "left")
 }

@@ -111,17 +111,23 @@ object TextAnalysis {
       textCol: String = "text"): DataFrame = {
     val base = docs.select(col(idCol).as("id"), col(textCol).as("text"))
     base.join(langBest(spark, docs, idCol, textCol), Seq("id"), "left")
-      .select(col("id"),
-        when(col("text").rlike("[一-鿿]"), lit("zh"))
-          .otherwise(coalesce(col("lang"), lit("und"))).as("lang_id"),
+      .select(col("id"), langCase(col("text"), col("lang")).as("lang_id"),
         coalesce(col("score"), lit(0L)).as("score"))
   }
+
+  /** The language decision over a doc's text and its stopword-profile
+    * argmax (null when no profile hit): CJK codepoint → 'zh', else the
+    * argmax, else 'und'. Shared by [[langId]] and the curation chain
+    * ([[Curation]]), so the two lang_id columns cannot drift. */
+  private[operators] def langCase(textCol: Column, langCol: Column): Column =
+    when(textCol.rlike("[一-鿿]"), lit("zh"))
+      .otherwise(coalesce(langCol, lit("und")))
 
   /** (id, lang, score) — the stopword-profile argmax WITHOUT the join
     * back onto the doc frame; only docs with ≥1 profile hit appear. The
     * curation chain joins this directly onto its own per-doc frame (one
-    * corpus join instead of two) and applies the same CJK/'und' CASE;
-    * [[langId]] composes it identically, so the two cannot drift. */
+    * corpus join instead of two) and applies [[langCase]], as
+    * [[langId]] does. */
   private[operators] def langBest(spark: SparkSession, docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     import spark.implicits._

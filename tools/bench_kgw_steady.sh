@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# FROZEN two-cluster-size scaling protocol, gate v2 (BENCH/BASELINE.md
+# FROZEN two-cluster-size scaling protocol, gate v3 (BENCH/BASELINE.md
 # §scaling): paired steady-state kg_write. Each invocation of
 # graft.BenchKgw is one sample: synthesize (untimed) + full-size in-JVM
 # warm (untimed) + ONE timed e2e pipeline+bucketed-write. Samples
@@ -24,6 +24,20 @@
 #      with steal_pct >= 5.0 are excluded by tools/scaling_steady.py
 #      (excluded counts printed; a pair with a rejected member drops from
 #      the per-pair estimator).
+#
+# GATE v3 (PRE-REGISTERED 2026-08-18 before any sample it judged ran;
+# evidence: ladder sample 4 cpus=4 read 95,660 t/s with steal_pct 1.31 —
+# 39% below the same day's clean pair with NO steal signature, i.e. the
+# round-4 "contention steal accounting misses" failure mode striking
+# MID-sample after a clean opening canary) = all of gate v2, plus:
+#  (d) CLOSING canary bracket: immediately after each sample, the same
+#      16-process canary runs again and its mhash/steal are merged into
+#      the sample's own JSON line (canary_after_mhash,
+#      canary_after_steal). scaling_steady.py rejects samples whose
+#      closing canary reads mhash < 0.95 OR steal >= 3 — the same
+#      thresholds as the opening gate, so a sample is accepted only if
+#      the box could deliver full throughput at BOTH ends of its window.
+#      Rule (d) can only REJECT samples — it cannot promote one.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 PAIRS="${PAIRS:-5}"
@@ -36,7 +50,7 @@ CANARY_S="${CANARY_S:-3}"
 CANARY_MAX_STEAL="${CANARY_MAX_STEAL:-3.0}"
 CANARY_MIN_MHASH="${CANARY_MIN_MHASH:-0.95}"
 mkdir -p BENCH
-echo "$(date -u +%FT%TZ) loadavg=$(cut -d' ' -f1-3 /proc/loadavg) steady-v2 pairs=$PAIRS lo=$LO hi=$HI docs=$DOCS gate_load=$GATE_LOAD canary=${CANARY_THREADS}x${CANARY_S}s<${CANARY_MAX_STEAL}%" >> BENCH/preconditions.log
+echo "$(date -u +%FT%TZ) loadavg=$(cut -d' ' -f1-3 /proc/loadavg) steady-v3 pairs=$PAIRS lo=$LO hi=$HI docs=$DOCS gate_load=$GATE_LOAD canary=${CANARY_THREADS}x${CANARY_S}s<${CANARY_MAX_STEAL}%,>=${CANARY_MIN_MHASH}mhash bracket=open+close" >> BENCH/preconditions.log
 : > "BENCH/raw_steady_cpus${LO}.jsonl"
 : > "BENCH/raw_steady_cpus${HI}.jsonl"
 # compile once up front so per-invocation sbt runs don't interleave
@@ -73,9 +87,25 @@ for i in $(seq 1 "$PAIRS"); do
       continue
     fi
     echo "== steady sample $i/$PAIRS cpus=$cpus $(date -u +%T) loadavg=$(cut -d' ' -f1 /proc/loadavg) ==" >&2
-    SPARK_GRAFT_CPUS=$cpus SPARK_GRAFT_BENCH_DOCS="$DOCS" \
+    line=$(SPARK_GRAFT_CPUS=$cpus SPARK_GRAFT_BENCH_DOCS="$DOCS" \
       sbt -batch "runMain graft.BenchKgw" 2>/dev/null \
-      | grep '"metric"' | sed 's/^\[info\] //' >> "BENCH/raw_steady_cpus${cpus}.jsonl"
+      | grep '"metric"' | sed 's/^\[info\] //' | tail -1)
+    # closing canary bracket (rule d): merge into the sample's own JSON;
+    # the canary exits nonzero on threshold failure but still prints its
+    # measurement, so capture output regardless
+    cj=$(python3 tools/host_canary.py "$CANARY_THREADS" "$CANARY_S" \
+      "$CANARY_MAX_STEAL" "$CANARY_MIN_MHASH") || true
+    python3 - "$line" "$cj" <<'PYEOF' >> "BENCH/raw_steady_cpus${cpus}.jsonl"
+import json, sys
+r = json.loads(sys.argv[1])
+try:
+    c = json.loads(sys.argv[2])
+    r["canary_after_mhash"] = c["mhash"]
+    r["canary_after_steal"] = c["steal_pct"]
+except Exception:
+    r["canary_after_mhash"] = None
+print(json.dumps(r))
+PYEOF
   done
 done
 python3 tools/scaling_steady.py "$LO" "$HI"

@@ -13,9 +13,9 @@ aggregation; excluded counts are printed. Samples without the field
 any pair with a rejected member.
 
 Gate v3 rule (d) (PRE-REGISTERED 2026-08-18 before the extension run —
-see tools/bench_kgw_steady_v3.sh): samples carrying a closing-canary
+see tools/bench_kgw_steady.sh): samples carrying a closing-canary
 bracket (canary_after_mhash / canary_after_steal, merged into the JSON
-line by the v3 harness) are additionally rejected when the closing
+line by the harness) are additionally rejected when the closing
 canary read mhash < 0.95 or steal >= 3.0 — the opening gate's own
 calibrated thresholds, applied at the window's other end. Samples
 without the fields (v2 raws) are unaffected."""

@@ -6,12 +6,11 @@ import org.apache.spark.util.LongAccumulator
 /** Pipeline metrics (BASELINE.json:6,14 "per-partition lineage and metrics
   * accumulators").
   *
-  * Three layers, by mechanism:
+  * Two layers, by mechanism:
   *  - per-bucket lineage rows in the sink manifest (TripleSink) — the
   *    resume-critical record;
   *  - named LongAccumulators incremented inside the batched matcher
-  *    (spans seen / empty / mentions emitted) — live task-level counters;
-  *  - Dataset.observe on the final triple set (opt-in, Pipeline.triples).
+  *    (spans seen / empty / mentions emitted) — live task-level counters.
   */
 object Metrics {
 

@@ -24,87 +24,37 @@ object Pipeline {
   /** Full pipeline: triples with exact set semantics (distinct on
     * (subj, pred, obj) — P/R is set-based, BASELINE.json:2).
     *
-    * `atScale = false` (default) uses the dimension-fixture fast paths:
-    * sameAs is an in-memory Seq (dimension-sized by definition), so C3
-    * runs as driver union-find and C4 as a literal-map expression — zero
-    * extra Spark jobs. `atScale = true` swaps in the corpus-scale operator
-    * variants — distributed large-star/small-star connected components
-    * and join-based canonical remap — for open-world entity vocabularies
-    * that do not fit on the driver. Both variants emit the identical
-    * triple set and both are verified against the same DuckDB oracle
+    * The only choice made here is where C3 runs. `atScale = false`
+    * (default): sameAs is an in-memory Seq (dimension-sized by
+    * definition), so the component map comes from driver union-find as a
+    * local relation — no Spark job at construction time. `atScale = true`
+    * runs distributed large-star/small-star connected components, for
+    * open-world entity vocabularies that do not fit on the driver. Both
+    * then take the one [[triplesWithComponents]] path and emit the
+    * identical triple set, verified against the same DuckDB oracle
     * (`triples_final` / `triples_dist_cc`). */
   def triples(spark: SparkSession, docs: Dataset[Doc],
       gazetteer: Seq[GazEntry] = Spec.Gazetteer,
       sameAs: Seq[SameAsEdge] = Spec.SameAs,
       atScale: Boolean = false): DataFrame = {
     import spark.implicits._
-
-    val exploded = SpanOps.wellFormed(SpanOps.explodeSpans(docs))
-    val cands = GazetteerMatcher.candidates(spark, SpanOps.textSpans(exploded),
-      gazetteer)
-    val kept = Linker.top1(cands)
-    val (canon, entUris) =
-      if (atScale) {
-        val edges = spark.createDataset(sameAs)
-          .select(col("src_entity").as("src"), col("dst_entity").as("dst"))
-        val components = Canonicalizer.connectedComponents(spark, edges,
+    val edges = sameAs.map(e => (e.src_entity, e.dst_entity))
+    val components =
+      if (atScale)
+        Canonicalizer.connectedComponents(spark, edges.toDF("src", "dst"),
           smallGraphThreshold = 0L)
-        (Canonicalizer.remap(kept, "entity_id", components),
-          entUriDimFromComponents(spark, gazetteer, components))
-      } else {
-        val canonMap = Canonicalizer.componentsLocal(
-          sameAs.map(e => (e.src_entity, e.dst_entity)))
-        val remapped =
-          if (canonMap.isEmpty) kept
-          else {
-            val m = map(canonMap.toSeq.sortBy(_._1)
-              .flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
-            kept.withColumn("entity_id",
-              coalesce(element_at(m, col("entity_id")), col("entity_id")))
-          }
-        (remapped, entUriDim(spark, gazetteer, canonMap))
-      }
-
-    assemble(spark, exploded, canon, entUris)
+      else
+        Canonicalizer.componentsLocal(edges).toSeq.sortBy(_._1)
+          .toDF("entity_id", "canonical")
+    triplesWithComponents(spark, docs, components, gazetteer)
   }
 
-  /** Canonical entity-URI dimension minted from the GAZETTEER vocabulary,
-    * not from a corpus scan: every entity_id the pipeline can emit is
-    * canon(g) for some gazetteer entity g, so {canon(g)} is a complete,
-    * dimension-sized URI key set. Minting here keeps sha2 off the corpus
-    * plan entirely AND removes the corpus-wide distinct + broadcast-
-    * subquery dependency on the match chain that a base-derived dimension
-    * had (a broadcast subplan cannot reuse the main plan's shuffle
-    * exchange, so it re-ran the whole match+top1 chain a second time —
-    * measured ~1.5× on kg_write at local[4]). */
-  private def entUriDim(spark: SparkSession, gazetteer: Seq[GazEntry],
-      canonMap: Map[String, String]): DataFrame = {
-    import spark.implicits._
-    val canonIds = gazetteer.map(_.entity_id)
-      .map(id => canonMap.getOrElse(id, id)).distinct.sorted
-    spark.createDataset(canonIds).toDF("entity_id")
-      .withColumn("ent_uri", Spec.entUriCol(col("entity_id")))
-  }
-
-  /** [[entUriDim]] for the at-scale/streaming paths, where the component
-    * map is a DataFrame: remap the gazetteer-entity dimension through it
-    * (dimension × dimension join), then mint. */
-  private def entUriDimFromComponents(spark: SparkSession,
-      gazetteer: Seq[GazEntry], components: DataFrame): DataFrame = {
-    import spark.implicits._
-    val dim = spark.createDataset(gazetteer.map(_.entity_id).distinct.sorted)
-      .toDF("entity_id")
-    Canonicalizer.remap(dim, "entity_id", components)
-      .distinct()
-      .withColumn("ent_uri", Spec.entUriCol(col("entity_id")))
-  }
-
-  /** Pipeline variant canonicalizing against a PRECOMPUTED component map
-    * (entity_id, canonical) — used by the streaming shim, whose
-    * incremental CC state table already IS the converged map for all
-    * edges seen so far ([[graft.streaming.DocStream]]). Always the
-    * at-scale join remap: a cross-batch entity vocabulary is open-world
-    * by construction. */
+  /** Pipeline canonicalizing against a component map (entity_id,
+    * canonical): explode → match → top-1 → C4 broadcast-join remap →
+    * assemble. [[triples]] builds the map from a sameAs Seq; the streaming
+    * shim passes its incremental CC state table, which already IS the
+    * converged map for all edges seen so far
+    * ([[graft.streaming.DocStream]]). */
   def triplesWithComponents(spark: SparkSession, docs: Dataset[Doc],
       components: DataFrame,
       gazetteer: Seq[GazEntry] = Spec.Gazetteer): DataFrame = {
@@ -113,13 +63,7 @@ object Pipeline {
       SpanOps.textSpans(exploded), gazetteer)
     val canon = Canonicalizer.remap(Linker.top1(cands), "entity_id",
       components)
-    assemble(spark, exploded, canon,
-      entUriDimFromComponents(spark, gazetteer, components))
-  }
 
-  /** Shared tail of both entry points: dedup → triple assembly → union. */
-  private def assemble(spark: SparkSession, exploded: DataFrame,
-      canon: DataFrame, entUriDim: DataFrame): DataFrame = {
     // G4 dedup happens BEFORE URI minting on the narrow natural keys —
     // far cheaper than deduping full minted-URI strings. The single
     // distinct collapses per-doc mention repetition (map-side combine) in
@@ -143,11 +87,10 @@ object Pipeline {
       .withColumn("link_kind", lit("media"))
 
     // Salted-hash URIs are minted once per DISTINCT canonical entity (the
-    // gazetteer-derived dimension computed by the caller — see entUriDim),
-    // then joined back — not sha2'd per corpus row. Broadcast at
-    // gazetteer-bounded cardinality; swap for a sort-merge join on
-    // open-world entity vocabularies.
-    val entUris = broadcast(entUriDim)
+    // gazetteer-derived dimension, see entUriDim), then joined back — not
+    // sha2'd per corpus row. Broadcast at gazetteer-bounded cardinality;
+    // swap for a sort-merge join on open-world entity vocabularies.
+    val entUris = broadcast(entUriDim(spark, gazetteer, components))
 
     val mentionTriples =
       Linker.mapPredicates(spark, mentions.join(entUris, "entity_id"))
@@ -168,5 +111,27 @@ object Pipeline {
     // semantics, BASELINE.json:2). No observe(): upstream of further
     // composition it mis-binds attributes in GenerateExec on Spark 4.1.
     mentionTriples.unionByName(labelTriples).unionByName(mediaTriples)
+  }
+
+  /** Canonical entity-URI dimension minted from the GAZETTEER vocabulary,
+    * not from a corpus scan: every entity_id the pipeline can emit is
+    * canon(g) for some gazetteer entity g, so {canon(g)} — the gazetteer
+    * ids remapped through the component map (dimension × dimension join)
+    * — is a complete, dimension-sized URI key set. Minting here keeps
+    * sha2 off the corpus plan entirely AND removes the corpus-wide
+    * distinct + broadcast-subquery dependency on the match chain that a
+    * base-derived dimension had (a broadcast subplan cannot reuse the main
+    * plan's shuffle exchange, so it re-ran the whole match+top1 chain a
+    * second time — measured ~1.5× on kg_write at local[4]). */
+  private def entUriDim(spark: SparkSession, gazetteer: Seq[GazEntry],
+      components: DataFrame): DataFrame = {
+    import spark.implicits._
+    val dim = spark.createDataset(gazetteer.map(_.entity_id).distinct.sorted)
+      .toDF("entity_id")
+    // one partition: gazetteer-sized rows need no shuffle (and no extra
+    // job) for the distinct
+    Canonicalizer.remap(dim, "entity_id", components)
+      .coalesce(1).distinct()
+      .withColumn("ent_uri", Spec.entUriCol(col("entity_id")))
   }
 }

@@ -139,10 +139,9 @@ object SparkEntry {
       Pipeline.triples(s, docs(s, dir))
         .select("subj", "pred", "obj", "obj_type")),
 
-    // G1–G4 at-scale variant: identical triple set via the corpus-scale
-    // operator paths — distributed CC (star joins), join-based canonical
-    // remap, broadcast-join predicate mapping. Checked against the SAME
-    // oracle as triples_final.
+    // G1–G4 at-scale variant: the component map comes from distributed
+    // CC (star joins) instead of driver union-find; the rest is the same
+    // path as triples_final. Checked against the SAME oracle.
     "triples_dist_cc" -> ((s, dir) =>
       Pipeline.triples(s, docs(s, dir), atScale = true)
         .select("subj", "pred", "obj", "obj_type")),

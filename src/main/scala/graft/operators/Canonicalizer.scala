@@ -13,6 +13,11 @@ import org.apache.spark.sql.functions._
 // closure; the object is stateless so this costs nothing
 object Canonicalizer extends Serializable {
 
+  /** Star-round cap of [[connectedComponents]]; it converges in O(log n). */
+  private val MaxIter = 50
+  /** Reliable-checkpoint cadence, in rounds, when a checkpoint dir is set. */
+  private val CheckpointEvery = 3
+
   /** C3: connected components over an undirected edge list via alternating
     * large-star / small-star DataFrame joins (Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC 2014 — the algorithm
@@ -22,7 +27,7 @@ object Canonicalizer extends Serializable {
     * Input: edges(src, dst) — any orientation, self-loops tolerated.
     * Output: (entity_id, canonical) covering every node that appears in an
     * edge; canonical = min node id of the component (string order).
-    * Checkpoints every `checkpointEvery` rounds to truncate lineage
+    * Checkpoints every `CheckpointEvery` rounds to truncate lineage
     * (BASELINE.json:14); uses localCheckpoint when no checkpoint dir is
     * configured (local/test mode).
     *
@@ -38,7 +43,6 @@ object Canonicalizer extends Serializable {
     * driver ordering could differ from Spark's column ordering.
     */
   def connectedComponents(spark: SparkSession, edges: DataFrame,
-      maxIter: Int = 50, checkpointEvery: Int = 3,
       smallGraphThreshold: Long = 100000L,
       preContract: Boolean = true): DataFrame = {
     val src = col("src"); val dst = col("dst")
@@ -120,7 +124,7 @@ object Canonicalizer extends Serializable {
     var prev = (-1L, 0L)
     var i = 0
     var converged = false
-    while (!converged && i < maxIter) {
+    while (!converged && i < MaxIter) {
       val tRound = System.nanoTime()
       // materialize every round: truncates the iterative plan's lineage
       // (no 2^k plan blowup) and makes the convergence checksum a cheap
@@ -128,7 +132,7 @@ object Canonicalizer extends Serializable {
       // when configured (cluster mode, BASELINE.json:14); local mode uses
       // executor-local blocks.
       val next =
-        if (hasCkptDir && (i + 1) % checkpointEvery == 0)
+        if (hasCkptDir && (i + 1) % CheckpointEvery == 0)
           smallStar(largeStar(cur)).checkpoint()
         else smallStar(largeStar(cur)).localCheckpoint()
       val cs = checksum(next)
@@ -142,8 +146,8 @@ object Canonicalizer extends Serializable {
       cur = next
       i += 1
     }
-    require(converged || i < maxIter,
-      s"connected components did not converge in $maxIter rounds")
+    require(converged || i < MaxIter,
+      s"connected components did not converge in $MaxIter rounds")
     // After convergence every edge is (node, componentMin); add the
     // identity rows for the minima themselves.
     cur.select(src.as("entity_id"), dst.as("canonical"))
@@ -176,7 +180,8 @@ object Canonicalizer extends Serializable {
     nodes.iterator.map(n => n -> find(n)).toMap
   }
 
-  /** String-id convenience used by the pipeline's fixture fast path. */
+  /** String-id convenience: the default component map of
+    * [[graft.Pipeline.triples]]. */
   def componentsLocal(edges: Seq[(String, String)]): Map[String, String] =
     componentsLocalT(edges)
 
@@ -252,11 +257,11 @@ object Canonicalizer extends Serializable {
   }
 
   /** C4: rewrite an id column through the component map; ids without a
-    * component stay themselves. Broadcast when the map is small. */
-  def remap(df: DataFrame, idCol: String, components: DataFrame,
-      hintBroadcast: Boolean = true): DataFrame = {
-    val comp0 = components.withColumnRenamed("entity_id", idCol)
-    val comp = if (hintBroadcast) broadcast(comp0) else comp0
+    * component stay themselves. The map is broadcast: it has one row per
+    * sameAs node, dimension-sized next to the rows it rewrites. */
+  def remap(df: DataFrame, idCol: String,
+      components: DataFrame): DataFrame = {
+    val comp = broadcast(components.withColumnRenamed("entity_id", idCol))
     df.join(comp, Seq(idCol), "left")
       .withColumn(idCol, coalesce(col("canonical"), col(idCol)))
       .drop("canonical")

@@ -7,10 +7,12 @@ import graft.sources.InterleavedDocs
   * (SURVEY.md §0.2, stricter than the ≥0.95 acceptance bar). */
 class PipelineSpec extends SparkTestBase {
 
-  private def sparkTriples(docs: Seq[Doc]): Set[SequentialOracle.T] = {
+  private def sparkTriples(docs: Seq[Doc],
+      sameAs: Seq[SameAsEdge] = Spec.SameAs,
+      atScale: Boolean = false): Set[SequentialOracle.T] = {
     import spark.implicits._
     val ds = spark.createDataset(docs)
-    Pipeline.triples(spark, ds)
+    Pipeline.triples(spark, ds, sameAs = sameAs, atScale = atScale)
       .collect()
       .map(r => SequentialOracle.T(r.getString(0), r.getString(1),
         r.getString(2), r.getString(3)))
@@ -44,8 +46,7 @@ class PipelineSpec extends SparkTestBase {
     assert(p == 1.0 && r == 1.0, s"P=$p R=$r")
   }
 
-  test("atScale variant (distributed CC + join remap + join predicate map) " +
-      "emits the identical triple set") {
+  test("atScale: distributed CC emits the driver union-find triple set") {
     import spark.implicits._
     val docs = InterleavedDocs.synthesize(spark, 400L, seed = 13L, skewPct = 15)
     val fast = Pipeline.triples(spark, docs)
@@ -57,6 +58,21 @@ class PipelineSpec extends SparkTestBase {
       .map(r => SequentialOracle.T(r.getString(0), r.getString(1),
         r.getString(2), r.getString(3))).toSet
     assert(actual == expected)
+  }
+
+  test("empty sameAs graph: default and atScale both equal the oracle") {
+    val docs = InterleavedDocs.synthesize(spark, 200L, seed = 5L,
+      skewPct = 10).collect().toSeq
+    val expected = SequentialOracle.triples(docs, Spec.Gazetteer, Seq.empty)
+    // the corpus mentions sameAs-linked entities, so the empty graph matters
+    assert(expected !=
+      SequentialOracle.triples(docs, Spec.Gazetteer, Spec.SameAs))
+    for (atScale <- Seq(false, true)) {
+      val actual = sparkTriples(docs, Seq.empty, atScale)
+      assert(actual == expected, s"atScale=$atScale: " +
+        s"onlySpark=${(actual -- expected).take(3)} " +
+        s"onlyOracle=${(expected -- actual).take(3)}")
+    }
   }
 
   test("pipeline handles crafted edge docs (empty text, overlaps, aliases)") {

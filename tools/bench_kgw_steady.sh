@@ -36,7 +36,8 @@
 #      canary_after_steal). scaling_steady.py rejects samples whose
 #      closing canary reads mhash < 0.95 OR steal >= 3 — the same
 #      thresholds as the opening gate, so a sample is accepted only if
-#      the box could deliver full throughput at BOTH ends of its window.
+#      the box could deliver full throughput at BOTH ends of its window —
+#      or printed nothing parseable (merged as canary_after_mhash: null).
 #      Rule (d) can only REJECT samples — it cannot promote one.
 set -euo pipefail
 cd "$(dirname "$0")/.."

@@ -17,8 +17,10 @@ see tools/bench_kgw_steady.sh): samples carrying a closing-canary
 bracket (canary_after_mhash / canary_after_steal, merged into the JSON
 line by the harness) are additionally rejected when the closing
 canary read mhash < 0.95 or steal >= 3.0 — the opening gate's own
-calibrated thresholds, applied at the window's other end. Samples
-without the fields (v2 raws) are unaffected."""
+calibrated thresholds, applied at the window's other end — and when the
+closing canary printed nothing parseable (the harness then writes
+canary_after_mhash: null): a crashed canary vouches for nothing.
+Samples without the fields (v2 raws) are unaffected."""
 import json
 import statistics
 import sys
@@ -43,8 +45,9 @@ CANARY_MAX_STEAL = 3.0
 def accepted(r):
     if r.get("steal_pct") is not None and r["steal_pct"] >= STEAL_MAX:
         return False
-    if r.get("canary_after_mhash") is not None:
-        if r["canary_after_mhash"] < CANARY_MIN_MHASH:
+    if "canary_after_mhash" in r:
+        mhash = r["canary_after_mhash"]
+        if mhash is None or mhash < CANARY_MIN_MHASH:
             return False
         if r.get("canary_after_steal", 0.0) >= CANARY_MAX_STEAL:
             return False
@@ -60,7 +63,7 @@ def main():
     n_rej_a, n_rej_b = len(a_all) - len(a), len(b_all) - len(b)
     if n_rej_a or n_rej_b:
         print(f"  gate exclusions (v2: steal_pct >= {STEAL_MAX}; v3: closing "
-              f"canary < {CANARY_MIN_MHASH} Mhash or steal >= "
+              f"canary missing, < {CANARY_MIN_MHASH} Mhash or steal >= "
               f"{CANARY_MAX_STEAL}): dropped {n_rej_a}/{len(a_all)} "
               f"local[{lo}] and {n_rej_b}/{len(b_all)} local[{hi}] samples")
     if not a or not b:

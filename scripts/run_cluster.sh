@@ -3,8 +3,8 @@
 # multi-executor clusters at N and 4N executors").
 #
 # The sandbox has no multi-node cluster; this script is the launch contract
-# the jar is built for — identical code paths run in local[8]/local[32]
-# (see tools/bench_scaling.sh for the sandbox scaling evidence).
+# the jar is built for — identical code paths run in local[N] (see
+# tools/bench_kgw_steady.sh for the sandbox N vs 4N scaling protocol).
 #
 # Usage: MASTER=yarn N_EXECUTORS=64 scripts/run_cluster.sh <sfDir>
 set -euo pipefail

@@ -83,23 +83,17 @@ object Bench {
     // 1. north star: full pipeline + bucketed write, `SPARK_GRAFT_BENCH_DOCS`
     // docs (default 100k), 2% head skew. Corpus generation is untimed setup
     // (materialized to parquet first) so the metric is pure
-    // read → construct → materialize throughput. The scaling protocol
-    // (tools/bench_scaling.sh) sets 1M docs so the run is compute-bound
-    // rather than job-overhead-bound.
+    // read → construct → materialize throughput.
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "100000").toLong
     val docsPath = tmpDir("graft-bench-docs")
     InterleavedDocs.synthesize(spark, nDocs, seed = 42L, skewPct = 2)
       .write.mode("overwrite").parquet(docsPath)
     // untimed in-JVM warm-up: JIT + codegen-compile every pipeline path so
     // the timed number isn't dominated by first-job compilation (measured
-    // ±50% between cold JVMs otherwise). Default 20k-doc slice; the
-    // scaling protocol sets SPARK_GRAFT_WARM_DOCS=nDocs so the timed run
-    // measures warm steady state (tiered JIT needs full-size stages to
-    // reach C2 — a 20k warm-up left the first timed 1M-doc run ~35%
-    // off steady state, identically biasing neither parallelism level
-    // but inflating every absolute number).
+    // ±50% between cold JVMs otherwise) over a 20k-doc slice, or the
+    // whole corpus when it is smaller.
     locally {
-      val warmN = sys.env.getOrElse("SPARK_GRAFT_WARM_DOCS", "20000").toLong
+      val warmN = 20000L
       val warmOut = tmpDir("graft-bench-warm")
       // the warm-up must run the IDENTICAL plan as the timed run: .limit()
       // would add a LocalLimit + single-partition GlobalLimit exchange,

@@ -177,29 +177,6 @@ object Similarity {
         col("rk").cast("bigint").as("rk"))
   }
 
-  /** Exact top-k neighbors of the `queries` vectors against the full
-    * `corpus` (self excluded), queries broadcast — the sampled-recall
-    * baseline for large-ANN benches, where all-pairs [[bruteForceTopK]]
-    * is quadratic in the corpus but exact answers for a small query
-    * sample cost only |queries| × |corpus| codegen'd dots streamed
-    * map-side. */
-  def bruteForceTopKOf(queries: DataFrame, corpus: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val x = prepared(queries, idCol, vecCol, "vec_id")
-    val y = prepared(corpus, idCol, vecCol, "neighbor_id")
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    y.crossJoin(broadcast(x))
-      .filter(col("vec_id") =!= col("neighbor_id"))
-      .withColumn("cos", vdot(col("vec_id_vd"), col("neighbor_id_vd")) /
-        (col("vec_id_nrm") * col("neighbor_id_nrm")))
-      .select("vec_id", "neighbor_id", "cos")
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select(col("vec_id"), col("neighbor_id"), round(col("cos"), 6).as("cos"),
-        col("rk").cast("bigint").as("rk"))
-  }
-
   /** struct(dot-score, cell-index) per centroid; array_max over these is
     * argmax-by-score with ties broken toward the LARGER cell index (struct
     * ordering) — the DuckDB oracle mirrors with ORDER BY s DESC, cell DESC. */

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{Doc, GazEntry, SameAsEdge, Spec}
@@ -122,43 +122,6 @@ object InterleavedDocs {
         when(hasMedia, array(s0, sMedia, s2m)).otherwise(array(s0, s2))
           .as("spans"))
       .as[Doc]
-  }
-
-  /** Flat (doc_id, text) corpus generator for CURATION benchmarks at
-    * arbitrary scale — the testdata documents table's shape, but with a
-    * hash-derived ~`vocabSize`-word vocabulary (so the shingle space is
-    * diverse and stop-shingle pruning doesn't erase the corpus, unlike
-    * the 31-word KG vocabulary) and planted duplicates: `dupPct` percent
-    * of docs clone an earlier doc, half byte-identical (exercises exact
-    * dedup) and half with one token mutated (exercises MinHash-LSH
-    * near-dup clustering). Every ~6th token is an English stopword so
-    * language-ID resolves 'en' and the quality score spreads across the
-    * 0.7 threshold with doc length (20–59 tokens). Deterministic via
-    * xxhash64 — no rand(), reruns identical. */
-  def synthesizeFlatDocs(spark: SparkSession, nDocs: Long, seed: Long = 7L,
-      vocabSize: Int = 50000, dupPct: Int = 5): DataFrame = {
-    val id = col("id")
-    def h(tag: String, extra: Column*): Column =
-      xxhash64((lit(seed) +: lit(tag) +: extra): _*)
-    val isDup = id >= 1000L && pmod(h("dup", id), lit(100L)) < dupPct
-    // near-dups get ONE mutated token; the other half are byte-identical
-    val isMut = pmod(h("mut", id), lit(2L)) === 0
-    val src = when(isDup, id - (pmod(h("off", id), lit(997L)) + 1))
-      .otherwise(id)
-    val n = (pmod(h("n", src), lit(40L)) + 20).cast("int")
-    val stop = array(Seq("the", "a", "is", "and", "of").map(lit): _*)
-    def tok(j: Column): Column =
-      when(pmod(h("s", src, j), lit(6L)) === 0,
-        element_at(stop, (pmod(h("sw", src, j), lit(5L)) + 1).cast("int")))
-        .otherwise(concat(lit("w"), pmod(h("w", src, j),
-          lit(vocabSize.toLong))))
-    val mutPos = pmod(h("mp", id), n.cast("long")).cast("int")
-    val mutTok = concat(lit("w"), pmod(h("mw", id), lit(vocabSize.toLong)))
-    val text = array_join(
-      transform(sequence(lit(0), n - 1),
-        j => when(isDup && isMut && j === mutPos, mutTok).otherwise(tok(j))),
-      " ")
-    spark.range(nDocs).select(id.as("doc_id"), text.as("text"))
   }
 
   /** Gazetteer fixture as a Dataset (FIXTURES.md §2; small → broadcast). */

@@ -145,10 +145,14 @@ object TripleSink {
     // Cache BEFORE repartitionByRange: the range partitioner runs a
     // sampling pass over its child — uncached, that would recompute the
     // entire upstream pipeline a second time.
-    val withBucket = df.withColumn(bucketCol,
-        pmod(xxhash64(col(keyCol)), lit(buckets.toLong)).cast("int"))
-      .filter(col(bucketCol).isin(target.toSeq: _*))
-      .cache()
+    val bucketed = df.withColumn(bucketCol,
+      pmod(xxhash64(col(keyCol)), lit(buckets.toLong)).cast("int"))
+    // Filter only on a resume or `onlyBuckets` run. On a fresh write the
+    // filter keeps every row, yet the optimizer still pushes it through a
+    // union into each branch, where it splits shared subplans (the triple
+    // union's URI dimension) into separately executed copies.
+    val withBucket = (if (target.size == buckets) bucketed
+      else bucketed.filter(col(bucketCol).isin(target.toSeq: _*))).cache()
 
     // C6: spread the key space, cluster within files by key
     withBucket

@@ -77,15 +77,12 @@ object DocStream {
     *   3. the new batch is left-anti joined against that broadcast
     *      intersection.
     * Per-batch cost is one shuffle-free columnar scan of history (3
-    * columns, bucket-pruned) instead of a full-history shuffle —
-    * benchmarked ~flat as history grows ([[graft.BenchStream]]). An
-    * Iceberg deployment would express the same thing as MERGE INTO on the
-    * bucketed table; `broadcastDedup = false` restores the shuffle
-    * anti-join for deployments with unbounded micro-batches. */
+    * columns, bucket-pruned) instead of a full-history shuffle; the plan
+    * shape is spec-asserted (`StreamingSpec`). An Iceberg deployment
+    * would express the same thing as MERGE INTO on the bucketed table. */
   def run(spark: SparkSession, inPath: String, outPath: String,
       checkpoint: String, maxFilesPerTrigger: Option[Int] = None,
       sameAsForBatch: Long => Seq[SameAsEdge] = _ => Spec.SameAs,
-      broadcastDedup: Boolean = true,
       // test-only failure injection: invoked at named points inside the
       // micro-batch so specs can kill the query mid-batch and assert the
       // restart path (checkpoint replay + idempotent state overwrite +
@@ -106,7 +103,7 @@ object DocStream {
         val triples = Pipeline.triplesWithComponents(s, batch, comps).cache()
         try {
           val novel = dedupAgainstPrior(s, triples, outPath,
-            priorBatchDirs(s, outPath, batchId), broadcastDedup)
+            priorBatchDirs(s, outPath, batchId))
           TripleSink.writeTriples(s, novel, s"$outPath/batch_id=$batchId")
         } finally triples.unpersist()
         ()
@@ -118,33 +115,26 @@ object DocStream {
     * batch's key set → broadcast left-anti of the batch against the
     * surviving intersection. `triples` should be cached by the caller (it
     * feeds the bucket-set agg, the broadcast key build, and the returned
-    * plan). Package-visible so [[graft.BenchStream]] audits and times the
-    * REAL plan rather than a replica. */
+    * plan). Package-visible so `StreamingSpec` audits the real plan. */
   private[graft] def dedupAgainstPrior(s: SparkSession, triples: DataFrame,
-      outPath: String, prior: Seq[String],
-      broadcastDedup: Boolean = true): DataFrame =
+      outPath: String, prior: Seq[String]): DataFrame =
     if (prior.isEmpty) triples
     else {
       // basePath: the batch_id=… dirs are siblings under one partitioned
       // table root, not independent tables — partition discovery exposes
       // batch_id AND subj_bucket as columns
       val priorAll = s.read.option("basePath", outPath).parquet(prior: _*)
-      if (!broadcastDedup)
-        triples.join(priorAll.select("subj", "pred", "obj"),
-          Seq("subj", "pred", "obj"), "left_anti")
-      else {
-        // bounded collect: ≤ DefaultSubjectBuckets ints
-        val batchBuckets = triples
-          .select(pmod(xxhash64(col("subj")),
-            lit(Spec.DefaultSubjectBuckets.toLong)).cast("int").as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        val dups = priorAll
-          .filter(col("subj_bucket").isin(batchBuckets: _*))
-          .select("subj", "pred", "obj")
-          .join(broadcast(triples.select("subj", "pred", "obj")),
-            Seq("subj", "pred", "obj"), "left_semi")
-        triples.join(broadcast(dups), Seq("subj", "pred", "obj"), "left_anti")
-      }
+      // bounded collect: ≤ DefaultSubjectBuckets ints
+      val batchBuckets = triples
+        .select(pmod(xxhash64(col("subj")),
+          lit(Spec.DefaultSubjectBuckets.toLong)).cast("int").as("b"))
+        .distinct().collect().map(_.getInt(0)).toSeq
+      val dups = priorAll
+        .filter(col("subj_bucket").isin(batchBuckets: _*))
+        .select("subj", "pred", "obj")
+        .join(broadcast(triples.select("subj", "pred", "obj")),
+          Seq("subj", "pred", "obj"), "left_semi")
+      triples.join(broadcast(dups), Seq("subj", "pred", "obj"), "left_anti")
     }
 
   private def statePath(outPath: String): String = s"$outPath/_cc_state"
@@ -256,7 +246,8 @@ object DocStream {
   /** Completed batch sub-tables already on disk (excluding `batchId`
     * itself, which a failed-and-retried micro-batch may have partially
     * written — its buckets are finished idempotently by the sink's
-    * manifest resume protocol, not double-anti-joined). */
+    * manifest resume protocol, not double-anti-joined). Package-visible
+    * so `StreamingSpec` feeds [[dedupAgainstPrior]] the real history. */
   private[graft] def priorBatchDirs(s: SparkSession, outPath: String,
       batchId: Long): Seq[String] = {
     val root = new Path(outPath)

@@ -217,29 +217,6 @@ class DedupSpec extends SparkTestBase {
       again.map(_.toString).sorted))
   }
 
-  test("synthesizeFlatDocs: deterministic corpus with plantable curation work") {
-    import graft.sources.InterleavedDocs
-    val d = InterleavedDocs.synthesizeFlatDocs(spark, 4000L).cache()
-    // deterministic across invocations
-    val again = InterleavedDocs.synthesizeFlatDocs(spark, 4000L)
-    assert(d.except(again).isEmpty && again.except(d).isEmpty)
-    // planted EXACT duplicates exist (half of the dup quota)
-    val exact = Dedup.exactByText(d).filter($"n" > 1).count()
-    assert(exact > 20, s"too few exact dup groups: $exact")
-    // planted NEAR duplicates are findable by the production MinHash path
-    val near = Dedup.minHashLshPairs(d, 3, 64, 16, 0.5).count()
-    assert(near > 20, s"too few near-dup pairs: $near")
-    // language-ID resolves 'en' for the overwhelming majority
-    val en = TextAnalysis.langId(spark, d).filter($"lang_id" === "en").count()
-    assert(en > 3800, s"lang-id 'en' count too low: $en")
-    // the quality score splits the corpus at the 0.7 default (both sides
-    // populated — the filter stage does real work)
-    val q = TextAnalysis.qualityScore(d)
-    assert(q.filter($"quality" >= 0.7).count() > 400)
-    assert(q.filter($"quality" < 0.7).count() > 400)
-    d.unpersist()
-  }
-
   test("curateDocs semantic: embedding edges drop docs the lexical pass keeps") {
     import graft.operators.Curation
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
@@ -1216,28 +1193,45 @@ class StreamingSpec extends SparkTestBase {
     assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
   }
 
-  test("shuffle-fallback dedup (broadcastDedup=false) equals the broadcast path") {
-    // the unbounded-micro-batch escape hatch must keep the exact-set
-    // contract: same corpus, same batching, shuffle anti-join instead of
-    // the broadcast-flipped dedup
+  test("cross-batch dedup plan: bucket-pruned history scan, no exchange before the semi join") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream5").toString
+    import graft.streaming.DocStream
+    val tmp = java.nio.file.Files.createTempDirectory("graft-stream6").toString
     val docs = graft.sources.InterleavedDocs.synthesize(spark, 120L, seed = 21L)
     docs.filter(col("doc_id") < "d00000060").write.parquet(s"$tmp/in")
     docs.filter(col("doc_id") >= "d00000060").write
       .mode("append").parquet(s"$tmp/in")
+    DocStream.run(spark, s"$tmp/in", s"$tmp/out", s"$tmp/ckpt",
+      maxFilesPerTrigger = Some(1)).awaitTermination(120000)
+    val prior = DocStream.priorBatchDirs(spark, s"$tmp/out", Long.MaxValue)
+    assert(prior.length >= 2, s"expected a multi-batch history, got $prior")
 
-    val q = graft.streaming.DocStream.run(spark, s"$tmp/in", s"$tmp/out",
-      s"$tmp/ckpt", maxFilesPerTrigger = Some(1), broadcastDedup = false)
-    q.awaitTermination(120000)
-
-    val streamed = spark.read.parquet(s"$tmp/out")
-      .select("subj", "pred", "obj", "obj_type")
-    assert(streamed.count() ==
-      streamed.dropDuplicates("subj", "pred", "obj").count(),
-      "cross-batch duplicate triples found")
-    val batch = Pipeline.triples(spark, docs)
-    assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
+    // a would-be next batch: a few docs, so it touches only some buckets
+    val next = Pipeline.triples(spark,
+      graft.sources.InterleavedDocs.synthesize(spark, 3L, seed = 99L)).cache()
+    try {
+      val novel = DocStream.dedupAgainstPrior(spark, next, s"$tmp/out", prior)
+      novel.collect()
+      val aqe = new AdaptiveSparkPlanHelper {}
+      val plan = novel.queryExecution.executedPlan
+      def historyScans(p: org.apache.spark.sql.execution.SparkPlan) =
+        aqe.collect(p) { case s: FileSourceScanExec => s }
+      val semis = aqe.collect(plan) {
+        case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j }
+      assert(semis.length == 1, s"one broadcast left-semi join:\n$plan")
+      val streamed = semis.head.left
+      assert(historyScans(streamed).nonEmpty &&
+        historyScans(streamed).forall(_.partitionFilters
+          .exists(_.references.exists(_.name == "subj_bucket"))),
+        s"history scan is not bucket-pruned:\n$plan")
+      assert(aqe.collect(streamed) { case e: ShuffleExchangeExec => e }
+        .isEmpty, s"history is shuffled before the semi join:\n$plan")
+    } finally next.unpersist()
   }
 
   test("kill after state write, before triple write: restart yields the exact batch set") {

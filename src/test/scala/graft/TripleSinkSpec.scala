@@ -1,9 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.model.Spec
 import graft.sources.{InterleavedDocs, TripleSink}
 
 /** S5/S7: bucketed partitioned write, manifest lineage, checkpoint-resume
@@ -53,6 +59,55 @@ class TripleSinkSpec extends SparkTestBase {
     // per-bucket lineage identical regardless of resume boundary
     assert(TripleSink.readManifest(full).sortBy(_.bucket) ==
       TripleSink.readManifest(resumed).sortBy(_.bucket))
+  }
+
+  /** Executed plans (tree strings, cached relations included) of the SQL
+    * actions `body` runs. Listener calls are asynchronous, so a marker
+    * query closes the window. */
+  private def executedPlans(body: => Unit): Seq[String] = {
+    val plans = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit(1).as("plans_end")).collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!plans.asScala.exists(_.contains("plans_end")) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  /** Plan lines of a filter on the bucket column. The optimizer inlines
+    * the column and pushes the filter into each union branch, so it reads
+    * `cast(pmod(xxhash64(<branch subj>, 42), buckets) as int) IN (…)`. */
+  private def bucketFilters(plans: Seq[String]): Seq[String] = {
+    val bucket = (s"subj_bucket|42\\), ${Spec.DefaultSubjectBuckets}\\) " +
+      "as int\\) (IN|INSET) ").r
+    plans.flatMap(_.linesIterator)
+      .filter(l => l.contains("Filter") && bucket.findFirstIn(l).nonEmpty)
+  }
+
+  test("fresh write runs no bucket filter; a partial write still filters") {
+    // uncached, as on the KG path, so a filter could reach the union
+    val uncached = Pipeline.triples(spark,
+      InterleavedDocs.synthesize(spark, 200L, seed = 21L))
+    val fresh = executedPlans(
+      TripleSink.writeTriples(spark, uncached, freshDir()))
+    assert(fresh.exists(_.contains("InsertIntoHadoopFsRelationCommand")),
+      "the write's plan was not captured")
+    assert(bucketFilters(fresh).isEmpty, "fresh write filtered on the " +
+      s"bucket:\n${bucketFilters(fresh).mkString("\n")}")
+    // the resume spec above checks that the filtered partial write plus
+    // its resume yields the fresh write's table
+    val partial = executedPlans(TripleSink.writeTriples(spark, uncached,
+      freshDir(), onlyBuckets = Some(Set(0, 1, 2))))
+    assert(bucketFilters(partial).nonEmpty,
+      "an onlyBuckets write must filter to its buckets")
   }
 
   test("resume on a complete table is a no-op") {

@@ -16,6 +16,7 @@ mhash >= min_mhash (thresholds optional; missing ones don't gate).
 import hashlib
 import json
 import multiprocessing
+import os
 import sys
 import time
 
@@ -66,7 +67,7 @@ def main():
         "canary_wall_s": round(wall, 2),
         "mhash": round(mhash, 4),
         "steal_pct": round(steal_pct, 2),
-        "busy_cores": round(d_busy / max(1, t1 - t0) * 32, 1),
+        "busy_cores": round(d_busy / max(1, t1 - t0) * os.cpu_count(), 1),
         "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
     print(json.dumps(res))

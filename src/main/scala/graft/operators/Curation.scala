@@ -229,12 +229,13 @@ object Curation {
 
   /** Materialize the curated corpus — the curation flagship's PRODUCT
     * surface, mirroring the KG triple sink (same generic bucketed write:
-    * doc-id hash buckets, range repartition + in-file doc_id clustering,
-    * manifest checkpoint-resume, exactly-once per bucket). Next to the
-    * manifest it lands `_graft_curation_lineage.json` recording how many
-    * docs each curation gate dropped (lang / quality / exact / lexical /
-    * semantic) and the input/survivor totals — the "what was dropped and
-    * why" record a training-data pipeline owes its consumers. The
+    * doc-id hash buckets, one hash exchange on the bucket, files sorted
+    * by (doc_id, text), manifest checkpoint-resume, exactly-once per
+    * bucket). Next to the manifest it lands
+    * `_graft_curation_lineage.json` recording how many docs each curation
+    * gate dropped (lang / quality / exact / lexical / semantic) and the
+    * input/survivor totals — the "what was dropped and why" record a
+    * training-data pipeline owes its consumers. The
     * decisions plan feeds two jobs (drop counts, survivor write), so it
     * is cached for the duration; resume recomputes it deterministically
     * (same seeds, same corpus) and only rewrites incomplete buckets.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Analytics over an emitted (subj, pred, obj) triple table — the
   * KG-construction report surface: the degree distribution locates the
-  * head-entity skew the salted join and range-repartitioned write exist
+  * head-entity skew the salted join and bucket-partitioned write exist
   * for, the hub list names the exact keys that need salting, and the
   * predicate totals are the sanity numbers a triple-store load is
   * reconciled against.
@@ -146,7 +146,7 @@ object GraphStats {
   /** Key-skew diagnostic: the log₂ histogram of per-key row counts —
     * the report that tells you whether a join/agg key needs salting
     * BEFORE the shuffle falls over (the head-entity skew the salted
-    * join and range-repartitioned write exist for, quantified). The
+    * join and bucket-partitioned write exist for, quantified). The
     * log₂ bucket is computed EXACTLY as binary-digit count − 1
     * (`conv(c,10,2)` length ≡ DuckDB `bin(c)` length — no float log2,
     * whose libm rounding can flip a power-of-two boundary between

@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
 import graft.model.Spec
 
 /** S5/S7: the materialized triple table — partitioned by subject-hash
-  * bucket, range-repartitioned and sorted by subject within files, with a
-  * JSON-lines manifest carrying per-bucket lineage (row count + content
-  * checksum) for checkpoint-resume (BASELINE.json:6,14; SURVEY.md §2.1,
-  * §7 M4).
+  * bucket, hash-partitioned on the bucket, every file sorted by (subj,
+  * pred, obj), with a JSON-lines manifest carrying per-bucket lineage (row count
+  * + content checksum, read back from the committed files) for
+  * checkpoint-resume (BASELINE.json:6,14; SURVEY.md §2.1, §7 M4).
   *
   * Iceberg substitution note (SURVEY.md §0.3): no Iceberg jar ships in
   * /opt/spark/jars, so the Iceberg *layout semantics* are implemented on
@@ -48,14 +48,8 @@ object TripleSink {
     (p.getFileSystem(conf), p)
   }
 
-  def readManifest(path: String): Seq[BucketLineage] = {
-    val (f, p) = hfs(manifestPath(path))
-    if (!f.exists(p)) Seq.empty
-    else {
-      val in = f.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+  def readManifest(path: String): Seq[BucketLineage] =
+    readSidecar(manifestPath(path)).toSeq.flatMap { text =>
       // fixed writer format, see appendManifest. A malformed line (torn
       // write on a filesystem without atomic rename) is flagged and
       // skipped, not thrown: its bucket simply reads as incomplete and is
@@ -78,29 +72,19 @@ object TripleSink {
         parsed
       }
     }
-  }
 
-  /** Append semantics implemented as read + rewrite-to-temp + atomic
-    * rename: the manifest is bucket-count-sized, and FileSystem.append is
-    * unsupported on several real filesystems (notably the checksummed
-    * local FS and object stores). The rename (FileContext with OVERWRITE —
-    * atomic on HDFS and the local FS) means a crash mid-write can never
-    * destroy previously durable bucket records: the old manifest stays
-    * intact until the new one is fully written (advisor finding, round 4 —
-    * the previous truncate-then-write could tear it). */
-  private def appendManifest(path: String, rows: Seq[BucketLineage]): Unit = {
-    val existing = readManifest(path)
-    val (f, p) = hfs(manifestPath(path))
-    val body = (existing ++ rows)
+  /** Append semantics implemented as read + rewrite through
+    * [[writeSidecar]]'s temp file + atomic rename: the manifest is
+    * bucket-count-sized, and FileSystem.append is unsupported on several
+    * real filesystems (notably the checksummed local FS and object
+    * stores). A crash mid-write can never destroy previously durable
+    * bucket records: the old manifest stays intact until the new one is
+    * fully written (advisor finding, round 4 — the previous
+    * truncate-then-write could tear it). */
+  private def appendManifest(path: String, rows: Seq[BucketLineage]): Unit =
+    writeSidecar(manifestPath(path), (readManifest(path) ++ rows)
       .map(r => s"${r.bucket},${r.rows},${r.checksum}")
-      .mkString("", "\n", "\n")
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    FileContext.getFileContext(p.toUri, f.getConf)
-      .rename(tmp, p, Options.Rename.OVERWRITE)
-  }
+      .mkString("", "\n", "\n"))
 
   /** Adds the physical subject-hash bucket column (FIXTURES.md §5). */
   def withSubjectBucket(triples: DataFrame,
@@ -129,10 +113,17 @@ object TripleSink {
   /** The generic bucketed, manifest-tracked, resumable table write behind
     * [[writeTriples]] (and the curated-corpus sink,
     * [[graft.operators.Curation.writeCurated]]): hash-bucket on `keyCol`,
-    * range-repartition + sort within files by `contentCols`, dynamic
-    * partition overwrite, per-bucket (rows, bit_xor checksum) lineage
-    * appended to the manifest. Resume protocol as documented on
-    * [[writeTriples]]. */
+    * one hash exchange into `buckets` partitions (partition = bucket),
+    * every file sorted by `contentCols`, dynamic partition overwrite, and
+    * per-bucket (rows, bit_xor checksum) lineage read back from the
+    * committed files and appended to the manifest. No cache: the input
+    * plan runs once, in the write. Resume protocol as documented on
+    * [[writeTriples]].
+    *
+    * The write stage runs at most `buckets` tasks, and the hash of the
+    * bucket id can send two buckets to one partition (16 buckets land in
+    * 10 of 16 partitions), so beyond about 10 cores the write does not
+    * use every core. */
   private[graft] def writeBucketed(spark: SparkSession, df: DataFrame,
       path: String, keyCol: String, bucketCol: String,
       contentCols: Seq[String], buckets: Int,
@@ -142,29 +133,32 @@ object TripleSink {
     val target = onlyBuckets.map(_.intersect(remaining)).getOrElse(remaining)
     if (target.isEmpty) return Seq.empty
 
-    // Cache BEFORE repartitionByRange: the range partitioner runs a
-    // sampling pass over its child — uncached, that would recompute the
-    // entire upstream pipeline a second time.
-    val bucketed = df.withColumn(bucketCol,
-      pmod(xxhash64(col(keyCol)), lit(buckets.toLong)).cast("int"))
     // Filter only on a resume or `onlyBuckets` run. On a fresh write the
     // filter keeps every row, yet the optimizer still pushes it through a
     // union into each branch, where it splits shared subplans (the triple
     // union's URI dimension) into separately executed copies.
-    val withBucket = (if (target.size == buckets) bucketed
-      else bucketed.filter(col(bucketCol).isin(target.toSeq: _*))).cache()
+    def inTarget(t: DataFrame): DataFrame =
+      if (target.size == buckets) t
+      else t.filter(col(bucketCol).isin(target.toSeq: _*))
+    val bucketed = inTarget(df.withColumn(bucketCol,
+      pmod(xxhash64(col(keyCol)), lit(buckets.toLong)).cast("int")))
 
-    // C6: spread the key space, cluster within files by key
-    withBucket
-      .repartitionByRange(col(bucketCol), col(keyCol))
-      .sortWithinPartitions(contentCols.map(col): _*)
+    // C6: the explicit partition count keeps AQE from coalescing buckets
+    // into fewer write tasks. The sort leads with the partition column, so
+    // it meets the writer's required ordering: Spark adds no sort of its
+    // own (which would replace this one) and every file is content-sorted.
+    bucketed
+      .repartition(buckets, col(bucketCol))
+      .sortWithinPartitions((bucketCol +: contentCols).map(col): _*)
       .write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(bucketCol)
       .parquet(path)
 
-    val lineage = withBucket
+    // The explicit schema reads a zero-row write (no bucket dirs) as empty
+    // instead of failing schema inference.
+    val lineage = inTarget(spark.read.schema(bucketed.schema).parquet(path))
       .groupBy(bucketCol)
       // bit_xor: order-independent content checksum that cannot overflow
       // under ANSI mode (a long sum would throw)
@@ -174,7 +168,6 @@ object TripleSink {
       .collect()
       .map(r => BucketLineage(r.getInt(0), r.getLong(1), r.getLong(2)))
       .toSeq
-    withBucket.unpersist()
     // buckets that had zero rows are still complete
     val empty = (target -- lineage.map(_.bucket).toSet).toSeq.sorted
       .map(b => BucketLineage(b, 0L, 0L))
@@ -184,7 +177,9 @@ object TripleSink {
   }
 
   /** Atomically (temp + rename) write a small sidecar text file next to a
-    * table — used for the curated sink's drop-lineage JSON. */
+    * table — the manifest and the curated sink's drop-lineage JSON. The
+    * rename (FileContext with OVERWRITE) is atomic on HDFS and the local
+    * FS. */
   private[graft] def writeSidecar(path: String, body: String): Unit = {
     val (f, p) = hfs(path)
     val tmp = new Path(p.getParent, s".${p.getName}.tmp")

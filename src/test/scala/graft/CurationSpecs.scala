@@ -1164,8 +1164,9 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions.col
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream2").toString
     val docs = graft.sources.InterleavedDocs.synthesize(spark, 120L, seed = 21L)
-    // two input files → maxFilesPerTrigger=1 forces two micro-batches;
-    // label triples for shared entities WILL recur across the batches
+    // each write.parquet lands several part files, so maxFilesPerTrigger=1
+    // runs at least two micro-batches; label triples for shared entities
+    // WILL recur across the batches
     docs.filter(col("doc_id") < "d00000060").write.parquet(s"$tmp/in")
     docs.filter(col("doc_id") >= "d00000060").write
       .mode("append").parquet(s"$tmp/in")

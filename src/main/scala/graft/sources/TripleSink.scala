@@ -3,16 +3,16 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Spec
 
 /** S5/S7: the materialized triple table — partitioned by subject-hash
   * bucket, hash-partitioned on the bucket, every file sorted by (subj,
-  * pred, obj), with a JSON-lines manifest carrying per-bucket lineage (row count
-  * + content checksum, read back from the committed files) for
-  * checkpoint-resume (BASELINE.json:6,14; SURVEY.md §2.1, §7 M4).
+  * pred, obj), with a JSON-lines manifest carrying per-bucket lineage (row
+  * count + content checksum of the rows written) for checkpoint-resume
+  * (BASELINE.json:6,14; SURVEY.md §2.1, §7 M4).
   *
   * Iceberg substitution note (SURVEY.md §0.3): no Iceberg jar ships in
   * /opt/spark/jars, so the Iceberg *layout semantics* are implemented on
@@ -111,19 +111,22 @@ object TripleSink {
       buckets = buckets, onlyBuckets = onlyBuckets)
 
   /** The generic bucketed, manifest-tracked, resumable table write behind
-    * [[writeTriples]] (and the curated-corpus sink,
-    * [[graft.operators.Curation.writeCurated]]): hash-bucket on `keyCol`,
-    * one hash exchange into `buckets` partitions (partition = bucket),
-    * every file sorted by `contentCols`, dynamic partition overwrite, and
-    * per-bucket (rows, bit_xor checksum) lineage read back from the
-    * committed files and appended to the manifest. No cache: the input
-    * plan runs once, in the write. Resume protocol as documented on
-    * [[writeTriples]].
+    * [[writeTriples]] and [[graft.operators.Curation.writeCurated]]:
+    * hash-bucket on `keyCol`, one exchange, every file sorted by
+    * `contentCols`, dynamic partition overwrite, per-bucket (rows, bit_xor
+    * checksum) lineage appended to the manifest. No cache: the input plan
+    * runs once, in the write. Resume as documented on [[writeTriples]].
     *
-    * The write stage runs at most `buckets` tasks, and the hash of the
-    * bucket id can send two buckets to one partition (16 buckets land in
-    * 10 of 16 partitions), so beyond about 10 cores the write does not
-    * use every core. */
+    * The write runs max(`buckets`, spark.sql.shuffle.partitions) tasks:
+    * with more partitions than buckets, a salt of `keyCol` splits each
+    * bucket into ceil(partitions / buckets) parts, one file each. The
+    * exchange hashes its keys, so two can share a task (16 buckets land in
+    * 10 of 16 partitions).
+    *
+    * Lineage is observed on the rows the write tasks consume (two
+    * aggregates per target bucket, counted once per committed partition),
+    * not read back from the files, so a lost or duplicated output file
+    * shows as a manifest that disagrees with the table. */
   private[graft] def writeBucketed(spark: SparkSession, df: DataFrame,
       path: String, keyCol: String, bucketCol: String,
       contentCols: Seq[String], buckets: Int,
@@ -137,18 +140,32 @@ object TripleSink {
     // filter keeps every row, yet the optimizer still pushes it through a
     // union into each branch, where it splits shared subplans (the triple
     // union's URI dimension) into separately executed copies.
-    def inTarget(t: DataFrame): DataFrame =
-      if (target.size == buckets) t
-      else t.filter(col(bucketCol).isin(target.toSeq: _*))
-    val bucketed = inTarget(df.withColumn(bucketCol,
-      pmod(xxhash64(col(keyCol)), lit(buckets.toLong)).cast("int")))
+    val bucketed = df.withColumn(bucketCol,
+      pmod(xxhash64(col(keyCol)), lit(buckets.toLong)).cast("int"))
+    val inTarget = if (target.size == buckets) bucketed
+      else bucketed.filter(col(bucketCol).isin(target.toSeq: _*))
 
-    // C6: the explicit partition count keeps AQE from coalescing buckets
-    // into fewer write tasks. The sort leads with the partition column, so
-    // it meets the writer's required ordering: Spark adds no sort of its
-    // own (which would replace this one) and every file is content-sorted.
-    bucketed
-      .repartition(buckets, col(bucketCol))
+    // C6: the explicit count keeps AQE from coalescing the write tasks
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val salts = (partitions + buckets - 1) / buckets
+    val keys = col(bucketCol) +: (if (salts == 1) Nil
+      else Seq(pmod(hash(col(keyCol)), lit(salts))))
+    val order = target.toSeq.sorted
+    // bit_xor: order-independent content checksum that cannot overflow
+    // under ANSI mode (a long sum would throw)
+    val stats = order.flatMap { b =>
+      val in = col(bucketCol) === b
+      Seq(count_if(in).as(s"rows_$b"), coalesce(bit_xor(when(in,
+        xxhash64(contentCols.map(col): _*))), lit(0L)).as(s"checksum_$b"))
+    }
+    val observed = Observation()
+    // Observed after the exchange, in the stage that writes. The sort
+    // leads with the partition column, so it meets the writer's required
+    // ordering: Spark adds no sort of its own (which would replace this
+    // one) and every file is content-sorted.
+    inTarget
+      .repartition(math.max(buckets, partitions), keys: _*)
+      .observe(observed, stats.head, stats.tail: _*)
       .sortWithinPartitions((bucketCol +: contentCols).map(col): _*)
       .write
       .mode("overwrite")
@@ -156,24 +173,11 @@ object TripleSink {
       .partitionBy(bucketCol)
       .parquet(path)
 
-    // The explicit schema reads a zero-row write (no bucket dirs) as empty
-    // instead of failing schema inference.
-    val lineage = inTarget(spark.read.schema(bucketed.schema).parquet(path))
-      .groupBy(bucketCol)
-      // bit_xor: order-independent content checksum that cannot overflow
-      // under ANSI mode (a long sum would throw)
-      .agg(count(lit(1)).as("rows"),
-        coalesce(expr(s"bit_xor(xxhash64(${contentCols.mkString(", ")}))"),
-          lit(0L)).as("checksum"))
-      .collect()
-      .map(r => BucketLineage(r.getInt(0), r.getLong(1), r.getLong(2)))
-      .toSeq
-    // buckets that had zero rows are still complete
-    val empty = (target -- lineage.map(_.bucket).toSet).toSeq.sorted
-      .map(b => BucketLineage(b, 0L, 0L))
-    val all = (lineage ++ empty).sortBy(_.bucket)
-    appendManifest(path, all)
-    all
+    val stat = observed.get.view.mapValues(_.asInstanceOf[Long])
+    val lineage = order.map(b =>
+      BucketLineage(b, stat(s"rows_$b"), stat(s"checksum_$b")))
+    appendManifest(path, lineage)
+    lineage
   }
 
   /** Atomically (temp + rename) write a small sidecar text file next to a

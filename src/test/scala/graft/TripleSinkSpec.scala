@@ -78,20 +78,45 @@ class TripleSinkSpec extends SparkTestBase {
       diskLineage(resumed, 8), "manifest lineage must equal the files on disk")
   }
 
-  test("every bucket file is sorted by (subj, pred, obj) in row order") {
-    val dir = freshDir()
-    TripleSink.writeTriples(spark, triples, dir, buckets = 8)
-    val files = new java.io.File(dir).listFiles()
+  private def bucketFiles(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().toSeq
       .filter(_.getName.startsWith("subj_bucket="))
       .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
-    assert(files.nonEmpty)
-    for (f <- files) {
+
+  private def assertFilesSorted(dir: String): Unit = {
+    assert(bucketFiles(dir).nonEmpty)
+    for (f <- bucketFiles(dir)) {
       // one small file is one split, so collect() keeps file row order
       val rows = spark.read.parquet(f.getPath).select("subj", "pred", "obj")
       assert(rows.collect().toSeq == rows.sort("subj", "pred", "obj")
         .collect().toSeq, s"${f.getParentFile.getName}/${f.getName} " +
         "is not sorted by (subj, pred, obj)")
     }
+  }
+
+  test("every bucket file is sorted by (subj, pred, obj) in row order") {
+    val dir = freshDir()
+    TripleSink.writeTriples(spark, triples, dir, buckets = 8)
+    assertFilesSorted(dir)
+  }
+
+  test("more shuffle partitions than buckets split each bucket's write") {
+    // the suite's session runs 4 shuffle partitions
+    val plain, split = freshDir()
+    TripleSink.writeTriples(spark, triples, plain, buckets = 4)
+    val conf = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(conf)
+    spark.conf.set(conf, "16")
+    try TripleSink.writeTriples(spark, triples, split, buckets = 4)
+    finally spark.conf.set(conf, before)
+    assert(bucketFiles(plain).size == 4, "one write task per bucket")
+    assert(bucketFiles(split).size > 4, "16 partitions over 4 buckets " +
+      "must spread a bucket over several write tasks")
+    assertFilesSorted(split)
+    assert(TripleSink.readManifest(split).sortBy(_.bucket) ==
+      TripleSink.readManifest(plain).sortBy(_.bucket))
+    assert(TripleSink.readManifest(split).sortBy(_.bucket) ==
+      diskLineage(split, 4), "manifest lineage must equal the files on disk")
   }
 
   test("a zero-row write records every target bucket as empty") {
@@ -123,12 +148,13 @@ class TripleSinkSpec extends SparkTestBase {
     plans.asScala.toSeq
   }
 
-  /** Plan lines of a filter on the bucket column. The optimizer inlines
-    * the column and pushes the filter into each union branch, so it reads
+  /** Plan lines of a filter on the bucket column: on the named column
+    * (`subj_bucket#<id> IN (…)`), or, where the optimizer inlines the
+    * column and pushes the filter into each union branch,
     * `cast(pmod(xxhash64(<branch subj>, 42), buckets) as int) IN (…)`. */
   private def bucketFilters(plans: Seq[String]): Seq[String] = {
-    val bucket = (s"(subj_bucket|42\\), ${Spec.DefaultSubjectBuckets}\\) " +
-      "as int\\)) (IN|INSET) ").r
+    val bucket = (s"(subj_bucket#\\d+|42\\), ${Spec.DefaultSubjectBuckets}" +
+      "\\) as int\\)) (IN|INSET) ").r
     plans.flatMap(_.linesIterator)
       .filter(l => l.contains("Filter") && bucket.findFirstIn(l).nonEmpty)
   }

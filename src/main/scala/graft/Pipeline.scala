@@ -52,7 +52,7 @@ object Pipeline {
   /** Pipeline canonicalizing against a component map (entity_id,
     * canonical): explode → match → top-1 → C4 broadcast-join remap →
     * assemble. [[triples]] builds the map from a sameAs Seq; the streaming
-    * shim passes its incremental CC state table, which already IS the
+    * shim passes the local relation of its incremental CC state, the
     * converged map for all edges seen so far
     * ([[graft.streaming.DocStream]]). */
   def triplesWithComponents(spark: SparkSession, docs: Dataset[Doc],

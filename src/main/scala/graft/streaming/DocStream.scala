@@ -21,17 +21,19 @@ import graft.sources.{InterleavedDocs, TripleSink}
   *
   * Entity resolution is INCREMENTAL across batches: a versioned
   * component-map state table (`outPath/_cc_state/batch_id=k`) holds the
-  * converged (entity_id, canonical) map after batch k. Each batch runs
-  * connected components over just (new sameAs edges ∪ prior map as
-  * edges) — contracting a graph's spanning structure preserves its
-  * components, so this equals CC over every edge ever seen, without
-  * rescanning history; input size is O(|vocabulary| + |new edges|), not
-  * O(all edges). Batch triples are canonicalized with the CURRENT map;
-  * when a later batch merges components that earlier batches had already
-  * canonicalized apart, the already-written (append-only) triples become
-  * stale — [[currentView]] re-binds them through the latest map at read
-  * time. An Iceberg deployment would instead MERGE the affected rows;
-  * the bucketed-by-subj layout bounds that rewrite to the touched
+  * converged (entity_id, canonical) map after batch k. Each batch folds
+  * just its new sameAs edges into the prior map on the driver (union-find
+  * over new edges ∪ prior map rows as edges) — contracting a graph's
+  * spanning structure preserves its components, so this equals CC over
+  * every edge ever seen, without rescanning history. The map is
+  * driver-sized for the same reason as [[graft.Pipeline.triples]]'
+  * default path: every row comes from sameAs edges the caller already
+  * hands over as a Seq. Batch triples are canonicalized with the CURRENT
+  * map; when a later batch merges components that earlier batches had
+  * already canonicalized apart, the already-written (append-only) triples
+  * become stale — [[currentView]] re-binds them through the latest map
+  * at read time. An Iceberg deployment would instead MERGE the affected
+  * rows; the bucketed-by-subj layout bounds that rewrite to the touched
   * buckets. */
 object DocStream {
 
@@ -97,8 +99,9 @@ object DocStream {
         val comps = advanceComponents(s, outPath, batchId,
           sameAsForBatch(batchId))
         failpoint("after_state_write", batchId)
-        // the batch triple set feeds up to three jobs below (bucket-set
-        // agg, broadcast key build, final write) — cache once;
+        // comps is a local relation, so the batch plan scans no state
+        // file; the batch triple set feeds up to three jobs below
+        // (bucket-set agg, broadcast key build, final write) — cache once;
         // trigger-bounded, unpersisted before the batch completes
         val triples = Pipeline.triplesWithComponents(s, batch, comps).cache()
         try {
@@ -122,8 +125,10 @@ object DocStream {
     else {
       // basePath: the batch_id=… dirs are siblings under one partitioned
       // table root, not independent tables — partition discovery exposes
-      // batch_id AND subj_bucket as columns
-      val priorAll = s.read.option("basePath", outPath).parquet(prior: _*)
+      // batch_id AND subj_bucket as columns. The given data schema spares
+      // the schema-inference job a plain read runs every batch.
+      val priorAll = s.read.schema(TripleSchema)
+        .option("basePath", outPath).parquet(prior: _*)
       // bounded collect: ≤ DefaultSubjectBuckets ints
       val batchBuckets = triples
         .select(pmod(xxhash64(col("subj")),
@@ -139,6 +144,13 @@ object DocStream {
 
   private def statePath(outPath: String): String = s"$outPath/_cc_state"
 
+  /** Data columns of a batch sub-table (partition columns are discovered
+    * from the paths) and of a state version, as [[TripleSink]] and
+    * [[advanceComponents]] write them. */
+  private val TripleSchema =
+    "subj string, pred string, obj string, obj_type string"
+  private val StateSchema = "entity_id string, canonical string"
+
   /** All directory listings go through the Hadoop FileSystem API (resolved
     * from the session's Hadoop conf), like the Spark writes themselves —
     * with java.nio a non-local outPath (HDFS/S3A) would make [[latestState]]
@@ -148,33 +160,34 @@ object DocStream {
   private def fsOf(s: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** Incremental CC step: converge (this batch's new edges ∪ the latest
-    * prior state map read as edges) and persist the result as this
-    * batch's state version. Retry-safe: a re-run batch overwrites its own
-    * version and reads only strictly older state, so the step is
-    * idempotent. Returns the new map, read back from its own parquet (a
-    * stable scan, not the iterative CC plan). */
-  private def advanceComponents(s: SparkSession, outPath: String,
+  /** Incremental CC step: collect the latest prior state map, fold this
+    * batch's new edges into it with the driver union-find
+    * ([[Canonicalizer.componentsLocal]] over new edges ∪ prior rows as
+    * edges, self-loops dropped as [[Canonicalizer.connectedComponents]]
+    * drops them) and persist the result, as one file, as this batch's
+    * state version. Retry-safe: a re-run batch overwrites its own version
+    * and reads only strictly older state, so the step is idempotent.
+    * Returns the new map as a local relation, the form
+    * [[graft.Pipeline.triples]] passes on its default path: the batch
+    * plan scans no state file. */
+  private[graft] def advanceComponents(s: SparkSession, outPath: String,
       batchId: Long, newEdges: Seq[SameAsEdge]): DataFrame = {
     import s.implicits._
-    val edgesNew = s.createDataset(newEdges)
-      .select(col("src_entity").as("src"), col("dst_entity").as("dst"))
-    val edges = latestState(s, outPath, beforeBatch = batchId) match {
-      case Some(st) =>
-        edgesNew.union(
-          st.select(col("entity_id").as("src"), col("canonical").as("dst")))
-      case None => edgesNew
-    }
-    val comps = Canonicalizer.connectedComponents(s, edges)
-    val dir = s"${statePath(outPath)}/batch_id=$batchId"
-    comps.write.mode("overwrite").parquet(dir)
+    val prior = latestState(s, outPath, beforeBatch = batchId)
+      .map(_.as[(String, String)].collect().toSeq).getOrElse(Seq.empty)
+    val edges = (newEdges.map(e => (e.src_entity, e.dst_entity)) ++ prior)
+      .filter { case (a, b) => a != b }
+    val comps = Canonicalizer.componentsLocal(edges).toSeq.sortBy(_._1)
+      .toDF("entity_id", "canonical")
+    comps.coalesce(1).write.mode("overwrite")
+      .parquet(s"${statePath(outPath)}/batch_id=$batchId")
     // retention: each version is a FULL converged map, so only the newest
     // matters going forward; keep this one plus its immediate predecessor
     // (the retry-safety read target for a re-run of THIS batch) and drop
     // everything older — without this, a long-running stream accumulates
     // one map copy per micro-batch forever.
     pruneStateVersions(s, outPath, keepNewest = 2)
-    s.read.parquet(dir)
+    comps
   }
 
   /** State versions on disk: (batchId, path), newest first. */
@@ -205,7 +218,8 @@ object DocStream {
       beforeBatch: Long): Option[DataFrame] =
     stateVersions(s, outPath)
       .map(_._1).filter(_ < beforeBatch).maxOption
-      .map(b => s.read.parquet(s"${statePath(outPath)}/batch_id=$b"))
+      .map(b => s.read.schema(StateSchema)
+        .parquet(s"${statePath(outPath)}/batch_id=$b"))
 
   /** The exact current triple set: the union of all (append-only) batch
     * sub-tables with any STALE canonical-entity URIs re-bound through the

@@ -1336,4 +1336,95 @@ class StreamingSpec extends SparkTestBase {
     } finally stateDirs.close()
     assert(nVersions <= 2, s"state versions not pruned: $nVersions")
   }
+
+  test("zero-row micro-batch: later batches still dedup against the history") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions.col
+    import graft.streaming.DocStream
+    val tmp = Files.createTempDirectory("graft-stream7").toString
+    val docs = graft.sources.InterleavedDocs.synthesize(spark, 90L, seed = 61L)
+    val cut = "d%012d".format(45) // synthesize's doc_id format
+    val early = docs.filter(col("doc_id") < cut)
+    // one file per batch, in this order (file source orders by mtime):
+    // the middle file repeats the first, so its batch is all duplicates
+    Seq(early, early, docs.filter(col("doc_id") >= cut))
+      .zipWithIndex.foreach { case (d, k) =>
+        d.coalesce(1).write.parquet(s"$tmp/stage$k")
+        val part = Files.list(Paths.get(s"$tmp/stage$k"))
+        val f = try {
+          import scala.jdk.CollectionConverters._
+          part.iterator().asScala
+            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
+        } finally part.close()
+        val dst = Paths.get(s"$tmp/in/part-$k.parquet")
+        Files.createDirectories(dst.getParent)
+        Files.move(f, dst)
+        dst.toFile.setLastModified(1000000000000L + k * 1000L)
+      }
+    DocStream.run(spark, s"$tmp/in", s"$tmp/out", s"$tmp/ckpt",
+      maxFilesPerTrigger = Some(1)).awaitTermination(120000)
+
+    def rows(b: Int) = graft.sources.TripleSink
+      .readManifest(s"$tmp/out/batch_id=$b").map(_.rows).sum
+    assert(rows(0) > 0 && rows(1) == 0 && rows(2) > 0,
+      s"expected a zero-row middle batch, got ${(0 to 2).map(rows)}")
+    assert(DocStream.priorBatchDirs(spark, s"$tmp/out", Long.MaxValue) ==
+      Seq(0, 2).map(b => s"$tmp/out/batch_id=$b"))
+
+    val streamed = spark.read.parquet(s"$tmp/out")
+      .select("subj", "pred", "obj", "obj_type")
+    assert(streamed.count() ==
+      streamed.dropDuplicates("subj", "pred", "obj").count(),
+      "cross-batch duplicate triples found")
+    val batch = Pipeline.triples(spark, docs)
+    val view = DocStream.currentView(spark, s"$tmp/out")
+    assert(view.except(batch).isEmpty && batch.except(view).isEmpty)
+  }
+
+  test("advanceComponents folds random batches into the star-path components") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.scalacheck.{Gen, Prop, Test}
+    import graft.model.SameAsEdge
+    import graft.operators.Canonicalizer
+    import graft.streaming.DocStream
+    import spark.implicits._
+    // a small id alphabet whose string order differs from numeric order
+    // ("e10" < "e2"), so later edges often bridge earlier components
+    val node = Gen.choose(0, 11).map(i => s"e$i")
+    val edge = Gen.frequency(
+      1 -> node.map(n => (n, n)), // self-loop
+      5 -> Gen.zip(node, node))
+    val batchGen = Gen.frequency(
+      1 -> Gen.const(List.empty[(String, String)]),
+      4 -> Gen.choose(1, 6).flatMap(Gen.listOfN(_, edge)))
+    val batches = Gen.choose(1, 4).flatMap(Gen.listOfN(_, batchGen))
+
+    def newestState(out: String): Set[(String, String)] = {
+      val dirs = new java.io.File(s"$out/_cc_state").listFiles().toSeq
+        .filter(_.getName.startsWith("batch_id="))
+      val dir = dirs.maxBy(_.getName.stripPrefix("batch_id=").toLong)
+      spark.read.parquet(dir.getPath).as[(String, String)].collect().toSet
+    }
+
+    val prop = Prop.forAllNoShrink(batches) { bs =>
+      val out = java.nio.file.Files.createTempDirectory("graft-cc").toString
+      bs.indices.forall { k =>
+        val seen = bs.take(k + 1).flatten
+        val got = DocStream.advanceComponents(spark, out, k.toLong,
+          bs(k).map { case (a, b) => SameAsEdge(a, b) })
+        val want = Canonicalizer.connectedComponents(spark,
+            seen.toDF("src", "dst"), smallGraphThreshold = 0L)
+          .as[(String, String)].collect().toSet
+        val local = got.queryExecution.analyzed.collectLeaves()
+          .forall(_.isInstanceOf[LocalRelation])
+        val ok = local && newestState(out) == want &&
+          got.as[(String, String)].collect().toSet == want
+        if (!ok) info(s"batches $bs: batch $k, local relation = $local")
+        ok
+      }
+    }
+    val result = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(15).withInitialSeed(8L), prop)
+    assert(result.passed, result.status.toString)
+  }
 }

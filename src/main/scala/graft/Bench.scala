@@ -181,8 +181,7 @@ object Bench {
     // verified query surface runs the portable-md5 twin)
     val (tCurate, _) = timed {
       graft.operators.Curation.curateDocs(spark,
-        spark.read.parquet(s"$sfDir/documents.parquet"),
-        keepLang = "en", minQuality = 0.7).count()
+        spark.read.parquet(s"$sfDir/documents.parquet")).count()
     }
     results += "curate_docs" -> tCurate
 

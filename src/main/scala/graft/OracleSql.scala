@@ -425,8 +425,8 @@ object OracleSql {
         | WHERE round(cos, 6) >= 0.4""".stripMargin.replace("\n", "")
 
   /** Composite curation oracle: exact twin of Curation.curateDocs(
-    * keepLang="en", minQuality=0.7, n=3, numHashes=64, bands=16,
-    * minEstJaccard=0.5, maxDocFreq=Spec.DedupMaxDocFreq, portable=true).
+    * portable = true) at the operating point frozen in Spec (the
+    * `Curate*` constants and DedupMaxDocFreq, interpolated below).
     * Replays the WHOLE chain in one recursive SQL: language-ID argmax,
     * quality score, exact dedup keep-min, MinHash-LSH candidate pairs
     * over the filtered survivors (shingle pruning df computed WITHIN the
@@ -435,8 +435,8 @@ object OracleSql {
     * cc_components oracle. */
   val curateDocs: String = curateSql(semantic = false)
 
-  /** Semantic-dedup variant: exact twin of Curation.curateDocs(...,
-    * embeddings = Some(embeddings), minCos = 0.4, portable = true) — the
+  /** Semantic-dedup variant: exact twin of Curation.curateDocs(
+    * portable = true, embeddings = Some(embeddings)) — the
     * lexical chain above plus sign-LSH embedding near-dup edges over the
     * SAME kept set ([[embLshDupPairs]] machinery restricted to kept ids),
     * both edge families feeding one recursive CC fixpoint. */
@@ -452,32 +452,37 @@ object OracleSql {
   val curateDecisions: String = curateSql(semantic = true, decisions = true)
 
   /** Near-dup cluster size histogram — twin of
-    * [[graft.operators.Curation.dupClusterSizes]] (portable config, no
-    * embeddings → semantic = false, matching the driver query). */
+    * [[graft.operators.Curation.dupClusterSizes]] (portable config; it
+    * takes no embeddings, so semantic = false). */
   val curateClusterHist: String = curateSql(semantic = false, clusters = true)
 
   private def curateSql(semantic: Boolean,
       decisions: Boolean = false,
       clusters: Boolean = false): String = {
-    val numHashes = 64; val bands = 16; val rows = numHashes / bands
+    val numHashes = Spec.CurateNumHashes; val bands = Spec.CurateBands
+    val rows = numHashes / bands; val n = Spec.CurateShingleN
+    val lang = Spec.CurateKeepLang; val qualityFloor = Spec.CurateMinQuality
     val slots = (0 until numHashes).map(j =>
       s"min(('0x' || substr(md5('$j:' || shingle), 1, 15))::BIGINT) AS h$j")
       .mkString(", ")
     val sigList = (0 until numHashes).map(j => s"h$j").mkString("[", ", ", "]")
+    // The CTE fragments below keep their line breaks in the emitted SQL,
+    // so an interpolated constant must not re-wrap a fragment's lines.
     // semantic near-dup edges: the embLshDupPairs chain (portable md5
     // hyperplanes, exact cosine verify) over embeddings of KEPT docs;
     // defined between `pr` and `edges2` so edges2 can union both families.
     // The LSH shape is the IN-REGIME config for the frozen threshold —
     // derived from the same Similarity.lshConfigFor the Spark side
-    // resolves its default from, so the two can never drift (round-4
-    // judge item 1: the generic 6-plane config is ≈0.41 recall at 0.4)
+    // uses, so the two can never drift (the generic 6-plane config is
+    // ≈0.41 recall at 0.4)
     val semanticCtes: Seq[String] =
       if (!semantic) Seq.empty
       else {
         val minCos = Spec.CurateSemanticMinCos
         val (semPlanes, semTables) =
           graft.operators.Similarity.lshConfigFor(minCos)
-        lshCtes(nTables = semTables, nPlanes = semPlanes, dim = 64,
+        lshCtes(nTables = semTables, nPlanes = semPlanes,
+          dim = Spec.CurateEmbDim,
           pairPred = "<",
           source = "(SELECT vec_id, embedding FROM embeddings " +
             "JOIN kept ON kept.id = embeddings.vec_id)") :+
@@ -510,18 +515,19 @@ object OracleSql {
         |    CAST(length(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE)
         |      / len(string_split(text, ' ')) AS meanlen
         |    FROM documents))""".stripMargin,
-      """base AS (SELECT d.doc_id AS id, d.text, l.lang_id, q.quality,
-        |  q.n_tokens
-        |  FROM documents d JOIN lng l ON l.id = d.doc_id
-        |  JOIN qual q ON q.id = d.doc_id
-        |  WHERE l.lang_id = 'en' AND q.quality >= 0.7)""".stripMargin,
+      s"""base AS (SELECT d.doc_id AS id, d.text, l.lang_id, q.quality,
+         |  q.n_tokens
+         |  FROM documents d JOIN lng l ON l.id = d.doc_id
+         |  JOIN qual q ON q.id = d.doc_id
+         |  WHERE l.lang_id = '$lang' AND q.quality >= $qualityFloor)"""
+        .stripMargin,
       "ek AS (SELECT min(id) AS id FROM base GROUP BY md5(text))",
       "kept AS (SELECT b.* FROM base b JOIN ek ON ek.id = b.id)",
-      """sh2 AS (SELECT DISTINCT id,
-        |  unnest(list_transform(range(1, len(w) - 1),
-        |    i -> array_to_string(list_slice(w, i, i + 2), ' '))) AS shingle
+      s"""sh2 AS (SELECT DISTINCT id,
+        |  unnest(list_transform(range(1, len(w) - ${n - 2}),
+        |    i -> array_to_string(list_slice(w, i, i + ${n - 1}), ' '))) AS shingle
         |  FROM (SELECT id, string_split(text, ' ') AS w FROM kept)
-        |  WHERE len(w) >= 3)""".stripMargin,
+        |  WHERE len(w) >= $n)""".stripMargin,
       s"""shf2 AS (SELECT shingle FROM sh2 GROUP BY shingle
          |  HAVING count(*) <= ${Spec.DedupMaxDocFreq})""".stripMargin,
       "shp2 AS (SELECT sh2.id, sh2.shingle FROM sh2 JOIN shf2 USING (shingle))",
@@ -541,7 +547,8 @@ object OracleSql {
          |      i -> sa.sig[i] = sb.sig[i])) AS DOUBLE) / $numHashes AS est
          |  FROM cand2 c JOIN sig2 sa ON sa.id = c.a
          |  JOIN sig2 sb ON sb.id = c.b)
-         |  WHERE round(est, 6) >= 0.5)""".stripMargin) ++
+         |  WHERE round(est, 6) >= ${Spec.CurateMinEstJaccard})"""
+        .stripMargin) ++
       semanticCtes ++ Seq(
       "edges2 AS (SELECT a, b FROM pr UNION SELECT b, a FROM pr" +
         (if (semantic) " UNION SELECT a, b FROM spr UNION SELECT b, a FROM spr"
@@ -571,9 +578,9 @@ object OracleSql {
           |  FROM canon2 GROUP BY canonical) GROUP BY cluster_size"""
           .stripMargin.replace("\n", " ")
       else if (decisions)
-        """SELECT d.doc_id, CASE
-          |  WHEN l.lang_id <> 'en' THEN 'drop_lang'
-          |  WHEN q.quality < 0.7 THEN 'drop_quality'
+        s"""SELECT d.doc_id, CASE
+          |  WHEN l.lang_id <> '$lang' THEN 'drop_lang'
+          |  WHEN q.quality < $qualityFloor THEN 'drop_quality'
           |  WHEN k.id IS NULL THEN 'drop_exact'
           |  WHEN lo.id IS NOT NULL AND lx.id IS NOT NULL THEN 'drop_lexical'
           |  WHEN lo.id IS NOT NULL THEN 'drop_semantic'

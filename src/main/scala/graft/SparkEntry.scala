@@ -246,22 +246,23 @@ object SparkEntry {
         maxHamming = 3, hasher = Dedup.PortableMd5Hasher)),
 
     // composite curation flagship: lang filter -> quality filter -> exact
-    // dedup -> MinHash near-dup clustering (CC) -> keep cluster min; the
-    // oracle replays the whole chain incl. the CC fixpoint recursively
+    // dedup -> MinHash near-dup clustering (CC) -> keep cluster min, at
+    // the operating point frozen in Spec; the oracle replays the whole
+    // chain incl. the CC fixpoint recursively
     "curate_docs" -> ((s, dir) =>
       Curation.curateDocs(s, s.read.parquet(s"$dir/documents.parquet"),
-        keepLang = "en", minQuality = 0.7, portable = true)),
+        portable = true)),
 
     // semantic-dedup variant: lexical MinHash edges ∪ sign-LSH embedding
     // near-dup edges (over the same kept set) feed one CC clustering; the
     // oracle replays BOTH edge families into the same recursive fixpoint.
-    // The semantic LSH runs the IN-REGIME config for the frozen threshold
-    // (Similarity.lshConfigFor — ≥0.9 worst-case curve recall at 0.4)
+    // The semantic LSH runs at Spec.CurateSemanticMinCos with the
+    // IN-REGIME config for it (Similarity.lshConfigFor — ≥0.9 worst-case
+    // curve recall at 0.4)
     "curate_docs_semantic" -> ((s, dir) =>
       Curation.curateDocs(s, s.read.parquet(s"$dir/documents.parquet"),
-        keepLang = "en", minQuality = 0.7, portable = true,
-        embeddings = Some(s.read.parquet(s"$dir/embeddings.parquet")),
-        minCos = Spec.CurateSemanticMinCos)),
+        portable = true,
+        embeddings = Some(s.read.parquet(s"$dir/embeddings.parquet")))),
 
     // per-doc drop lineage of the semantic curation chain: every doc
     // labeled with its first failing gate; the oracle replays the whole
@@ -269,10 +270,8 @@ object SparkEntry {
     // decision surface writeCurated records in its lineage sidecar
     "curate_decisions" -> ((s, dir) =>
       Curation.curationDecisions(s,
-          s.read.parquet(s"$dir/documents.parquet"),
-          keepLang = "en", minQuality = 0.7, portable = true,
-          embeddings = Some(s.read.parquet(s"$dir/embeddings.parquet")),
-          minCos = Spec.CurateSemanticMinCos)
+          s.read.parquet(s"$dir/documents.parquet"), portable = true,
+          embeddings = Some(s.read.parquet(s"$dir/embeddings.parquet")))
         .select(col("doc_id"), col("status"))),
 
     // deterministic sampling + packing (training-data pipeline staples;

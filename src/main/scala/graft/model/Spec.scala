@@ -41,12 +41,30 @@ object Spec {
     * scale this is the knob that bounds the candidate join. */
   val DedupMaxDocFreq = 20L
 
+  // ----- Curation operating point -----------------------------------------
+  // The one setting of graft.operators.Curation, read by the Spark chain
+  // and interpolated into its DuckDB twin (OracleSql.curateSql).
+
+  /** Language a kept doc must be identified as. */
+  val CurateKeepLang = "en"
+  /** Minimum TextAnalysis quality score of a kept doc. */
+  val CurateMinQuality = 0.7
+  /** Lexical near-dup edges: word n-gram shingles, MinHash signature
+    * length, LSH bands (must divide the signature), and the estimated
+    * Jaccard a candidate pair must reach. */
+  val CurateShingleN = 3
+  val CurateNumHashes = 64
+  val CurateBands = 16
+  val CurateMinEstJaccard = 0.5
+
   /** Semantic-curation near-dup cosine threshold of the verified
     * curate_docs_semantic query surface — frozen here because the DuckDB
     * oracle must rebuild the sign-LSH edge family at the identical
     * operating point (threshold AND the in-regime plane/table config
     * derived from it via Similarity.lshConfigFor). */
   val CurateSemanticMinCos = 0.4
+  /** Width of the sf-dir `embeddings.embedding` vectors. */
+  val CurateEmbDim = 64
 
   // ----- URI minting (FIXTURES.md §4) ------------------------------------
   // ex:doc/<doc_id> ; ex:ent/<hex16(sha256(salt||canonical_entity_id))> ;

@@ -10,8 +10,9 @@ import graft.model.Spec
   * (builder prompt: "the operations a large-scale training-data pipeline
   * would need"), expressed as ONE declarative chain:
   *
-  *   1. language filter      — [[TextAnalysis.langId]] == keepLang
-  *   2. quality filter       — [[TextAnalysis.qualityScore]] ≥ minQuality
+  *   1. language filter      — [[TextAnalysis.langId]] == CurateKeepLang
+  *   2. quality filter       — [[TextAnalysis.qualityScore]] ≥
+  *                             CurateMinQuality
   *   3. exact dedup          — among byte-identical texts keep min doc_id
   *                             (hash groupBy + left-semi, no full-text
   *                             shuffle of survivors)
@@ -20,6 +21,13 @@ import graft.model.Spec
   *                             [[Canonicalizer.connectedComponents]] (the
   *                             SAME operator the KG path uses) clusters
   *                             it; each cluster keeps its min doc_id.
+  *
+  * The chain runs at one operating point, the `Curate*` constants and
+  * `DedupMaxDocFreq` in [[graft.model.Spec]]; the DuckDB twin
+  * (`OracleSql.curateSql`) reads the same constants. Its input is the
+  * sf-dir schema: `docs(doc_id, text)` and `embeddings(vec_id,
+  * embedding)`. `portable` swaps the production hash family for the
+  * md5 one the oracle can replay.
   *
   * Cluster-min retention (rather than "drop b of every pair") makes the
   * survivor set well-defined under transitive chains a~b~c and matches
@@ -30,7 +38,11 @@ import graft.model.Spec
   * end to end.
   *
   * Passing `embeddings` adds SEMANTIC near-dup edges (round-3 judge item
-  * 2): [[Similarity.lshDupPairs]] over the kept docs' embedding rows,
+  * 2): [[Similarity.lshDupPairs]] over the kept docs' embedding rows at
+  * cosine ≥ CurateSemanticMinCos, with the in-regime LSH shape
+  * [[Similarity.lshConfigFor]] gives for that threshold (the generic
+  * 6-plane/8-table default sits at ≈0.41 recall at cos 0.4; the resolved
+  * (3, 8) holds ≥0.9 on the worst-case curve),
   * unioned with the lexical MinHash edges before the CC clustering step —
   * a real training-data pipeline dedups both lexically and semantically,
   * and clustering the union means a doc chain linked half by text and
@@ -48,14 +60,8 @@ object Curation {
       comps: DataFrame,    // CC assignment (entity_id, canonical) — edge endpoints only
       losers: DataFrame)   // near-dup cluster non-minimum ids (id)
 
-  private def stages(spark: SparkSession, docs: DataFrame,
-      keepLang: String, minQuality: Double,
-      n: Int, numHashes: Int, bands: Int, minEstJaccard: Double,
-      maxDocFreq: Long, portable: Boolean,
-      idCol: String, textCol: String,
-      embeddings: Option[DataFrame], minCos: Double, embDim: Int,
-      embIdCol: String, embVecCol: String,
-      semNPlanes: Int, semNTables: Int): Stages = {
+  private def stages(spark: SparkSession, docs: DataFrame, portable: Boolean,
+      embeddings: Option[DataFrame]): Stages = {
     // ONE corpus join instead of three (round-6 optimization): quality
     // and n_tokens are pure projections of the text column — computed
     // INLINE via the shared TextAnalysis.qualityExprs builders, not
@@ -64,17 +70,17 @@ object Curation {
     // langId uses. Values are bit-identical by construction (shared column
     // builders on both sides), and the chain's per-doc frame now costs a
     // single left join against the dimension-sized profile-hit argmax.
-    val (nToks, _, quality) = TextAnalysis.qualityExprs(col(textCol))
+    val (nToks, _, quality) = TextAnalysis.qualityExprs(col("text"))
     val all = docs
-      .select(col(idCol).as("id"), col(textCol).as("text"),
+      .select(col("doc_id").as("id"), col("text"),
         nToks.cast("bigint").as("n_tokens"), quality.as("quality"))
-      .join(TextAnalysis.langBest(spark, docs, idCol, textCol),
+      .join(TextAnalysis.langBest(spark, docs, "doc_id", "text"),
         Seq("id"), "left")
       .select(col("id"), col("text"),
         TextAnalysis.langCase(col("text"), col("lang")).as("lang_id"),
         col("quality"), col("n_tokens"))
-    val base =
-      all.filter(col("lang_id") === keepLang && col("quality") >= minQuality)
+    val base = all.filter(col("lang_id") === Spec.CurateKeepLang &&
+      col("quality") >= Spec.CurateMinQuality)
 
     // exact dedup: min doc id per text hash, then left-semi back (keeps
     // the narrow (hash → min id) aggregate off the survivor row width)
@@ -86,9 +92,10 @@ object Curation {
     // near-dup edges over the exact-deduped survivors: LSH candidate
     // pairs -> connected components -> keep each cluster's min id. Docs
     // in no pair never enter CC and survive by default.
-    val lexPairs = Dedup.minHashLshPairs(kept, n, numHashes, bands,
-      minEstJaccard, idCol = "id", textCol = "text",
-      maxDocFreq = maxDocFreq, portable = portable)
+    val lexPairs = Dedup.minHashLshPairs(kept, Spec.CurateShingleN,
+      Spec.CurateNumHashes, Spec.CurateBands, Spec.CurateMinEstJaccard,
+      idCol = "id", textCol = "text", maxDocFreq = Spec.DedupMaxDocFreq,
+      portable = portable)
       .select("a", "b")
     val pairs = embeddings match {
       case None => lexPairs
@@ -97,13 +104,14 @@ object Curation {
         // clusters (left-semi restricts the embedding table to kept ids —
         // at scale this prunes the LSH banding input, not just the output)
         val embKept = e
-          .select(col(embIdCol).as("id"), col(embVecCol).as("emb"))
+          .select(col("vec_id").as("id"), col("embedding").as("emb"))
           .join(kept.select("id"), Seq("id"), "left_semi")
-        val (defPlanes, defTables) = Similarity.lshConfigFor(minCos)
-        val semPairs = Similarity.lshDupPairs(embKept, minCos, embDim,
-          nPlanes = if (semNPlanes > 0) semNPlanes else defPlanes,
-          nTables = if (semNTables > 0) semNTables else defTables,
-          idCol = "id", vecCol = "emb", portable = portable)
+        val (nPlanes, nTables) =
+          Similarity.lshConfigFor(Spec.CurateSemanticMinCos)
+        val semPairs = Similarity.lshDupPairs(embKept,
+          Spec.CurateSemanticMinCos, Spec.CurateEmbDim, nPlanes = nPlanes,
+          nTables = nTables, idCol = "id", vecCol = "emb",
+          portable = portable)
           .select("a", "b")
         lexPairs.unionByName(semPairs)
     }
@@ -118,26 +126,9 @@ object Curation {
   /** Surviving documents with their curation features:
     * (doc_id, lang_id, quality, n_tokens). */
   def curateDocs(spark: SparkSession, docs: DataFrame,
-      keepLang: String = "en", minQuality: Double = 0.7,
-      n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      minEstJaccard: Double = 0.5,
-      maxDocFreq: Long = Spec.DedupMaxDocFreq,
       portable: Boolean = false,
-      idCol: String = "doc_id", textCol: String = "text",
-      embeddings: Option[DataFrame] = None, minCos: Double = 0.4,
-      embDim: Int = 64, embIdCol: String = "vec_id",
-      embVecCol: String = "embedding",
-      // semantic-edge LSH shape. -1 (default) resolves to the IN-REGIME
-      // config for `minCos` via [[Similarity.lshConfigFor]] — round-4
-      // judge item 1: the generic 6-plane/8-table near-dup default sits
-      // at ≈0.41 recall at cos 0.4, silently missing ~60% of qualifying
-      // semantic pairs; the resolved (3, 8) config holds ≥0.9 on the
-      // operator's own worst-case curve (spec-asserted ≥0.8 empirically)
-      semNPlanes: Int = -1, semNTables: Int = -1): DataFrame = {
-    val st = stages(spark, docs, keepLang, minQuality, n, numHashes, bands,
-      minEstJaccard, maxDocFreq, portable, idCol, textCol,
-      embeddings, minCos, embDim, embIdCol, embVecCol,
-      semNPlanes, semNTables)
+      embeddings: Option[DataFrame] = None): DataFrame = {
+    val st = stages(spark, docs, portable, embeddings)
     st.kept.join(st.losers, Seq("id"), "left_anti")
       .select(col("id").as("doc_id"), col("lang_id"), col("quality"),
         col("n_tokens"))
@@ -157,20 +148,9 @@ object Curation {
     * the same stage frames as [[curateDocs]], so
     * `decisions.filter(status == "kept")` is exactly the survivor set. */
   def curationDecisions(spark: SparkSession, docs: DataFrame,
-      keepLang: String = "en", minQuality: Double = 0.7,
-      n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      minEstJaccard: Double = 0.5,
-      maxDocFreq: Long = Spec.DedupMaxDocFreq,
       portable: Boolean = false,
-      idCol: String = "doc_id", textCol: String = "text",
-      embeddings: Option[DataFrame] = None, minCos: Double = 0.4,
-      embDim: Int = 64, embIdCol: String = "vec_id",
-      embVecCol: String = "embedding",
-      semNPlanes: Int = -1, semNTables: Int = -1): DataFrame = {
-    val st = stages(spark, docs, keepLang, minQuality, n, numHashes, bands,
-      minEstJaccard, maxDocFreq, portable, idCol, textCol,
-      embeddings, minCos, embDim, embIdCol, embVecCol,
-      semNPlanes, semNTables)
+      embeddings: Option[DataFrame] = None): DataFrame = {
+    val st = stages(spark, docs, portable, embeddings)
     val k = st.kept.select(col("id"), lit(1).as("k_flag"))
     val lo = st.losers.select(col("id"), lit(1).as("l_flag"))
     val lx = st.lexPairs.select(col("a").as("id"))
@@ -181,8 +161,8 @@ object Curation {
       .join(lo, Seq("id"), "left")
       .join(lx, Seq("id"), "left")
       .withColumn("status",
-        when(col("lang_id") =!= keepLang, "drop_lang")
-          .when(col("quality") < minQuality, "drop_quality")
+        when(col("lang_id") =!= Spec.CurateKeepLang, "drop_lang")
+          .when(col("quality") < Spec.CurateMinQuality, "drop_quality")
           .when(col("k_flag").isNull, "drop_exact")
           .when(col("l_flag").isNotNull && col("x_flag").isNotNull,
             "drop_lexical")
@@ -201,20 +181,8 @@ object Curation {
     * Σ (size−1)·n_clusters = |cluster losers|. Built on the same stage
     * frames as [[curateDocs]], so histogram and survivors cannot drift. */
   def dupClusterSizes(spark: SparkSession, docs: DataFrame,
-      keepLang: String = "en", minQuality: Double = 0.7,
-      n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      minEstJaccard: Double = 0.5,
-      maxDocFreq: Long = Spec.DedupMaxDocFreq,
-      portable: Boolean = false,
-      idCol: String = "doc_id", textCol: String = "text",
-      embeddings: Option[DataFrame] = None, minCos: Double = 0.4,
-      embDim: Int = 64, embIdCol: String = "vec_id",
-      embVecCol: String = "embedding",
-      semNPlanes: Int = -1, semNTables: Int = -1): DataFrame = {
-    val st = stages(spark, docs, keepLang, minQuality, n, numHashes, bands,
-      minEstJaccard, maxDocFreq, portable, idCol, textCol,
-      embeddings, minCos, embDim, embIdCol, embVecCol,
-      semNPlanes, semNTables)
+      portable: Boolean = false): DataFrame = {
+    val st = stages(spark, docs, portable, embeddings = None)
     st.comps.groupBy(col("canonical")).agg(count(lit(1)).as("cluster_size"))
       .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
   }
@@ -243,22 +211,12 @@ object Curation {
     * [[graft.sources.TripleSink.writeTriples]]. */
   def writeCurated(spark: SparkSession, docs: DataFrame, path: String,
       buckets: Int = Spec.DefaultSubjectBuckets,
-      keepLang: String = "en", minQuality: Double = 0.7,
-      n: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      minEstJaccard: Double = 0.5,
-      maxDocFreq: Long = Spec.DedupMaxDocFreq,
       portable: Boolean = false,
-      idCol: String = "doc_id", textCol: String = "text",
-      embeddings: Option[DataFrame] = None, minCos: Double = 0.4,
-      embDim: Int = 64, embIdCol: String = "vec_id",
-      embVecCol: String = "embedding",
-      semNPlanes: Int = -1, semNTables: Int = -1,
+      embeddings: Option[DataFrame] = None,
       onlyBuckets: Option[Set[Int]] = None): CuratedWrite = {
     import graft.sources.TripleSink
-    val decisions = curationDecisions(spark, docs, keepLang, minQuality,
-      n, numHashes, bands, minEstJaccard, maxDocFreq, portable,
-      idCol, textCol, embeddings, minCos, embDim, embIdCol, embVecCol,
-      semNPlanes, semNTables).cache()
+    val decisions = curationDecisions(spark, docs, portable, embeddings)
+      .cache()
     try {
       // bounded collect: one row per status value (≤ 6)
       val drops = decisions.groupBy("status").count().collect()

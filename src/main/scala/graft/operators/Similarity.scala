@@ -35,20 +35,22 @@ object Similarity {
     1.0 - math.pow(1.0 - math.pow(p, nPlanes), nTables)
   }
 
+  private val InRegimeTables = 8
+  private val InRegimeRecall = 0.9
+
   /** In-regime (nPlanes, nTables) for a near-dup threshold: the LARGEST
     * nPlanes (fewest candidates — buckets halve per extra plane) whose
-    * worst-case theoretical recall at `minCos` itself still clears
-    * `targetRecall` with `nTables` tables. Lower thresholds get fewer
-    * planes (more candidate volume) — that trade-off is inherent to
-    * sign-LSH, not a tunable to paper over. At minCos 0.4 this yields
-    * (3, 8) ⇒ recall ≈ 0.90; at 0.95 it yields (12, 8) ⇒ ≈ 0.93 at far
-    * lower candidate volume than the generic default. */
-  def lshConfigFor(minCos: Double, nTables: Int = 8,
-      targetRecall: Double = 0.9): (Int, Int) = {
+    * worst-case theoretical recall at `minCos` itself still clears 0.9
+    * with 8 tables. Lower thresholds get fewer planes (more candidate
+    * volume) — that trade-off is inherent to sign-LSH, not a tunable to
+    * paper over. At minCos 0.4 this yields (3, 8) ⇒ recall ≈ 0.90; at
+    * 0.95 it yields (12, 8) ⇒ ≈ 0.93 at far lower candidate volume than
+    * the generic default. */
+  def lshConfigFor(minCos: Double): (Int, Int) = {
     val nPlanes = (12 to 1 by -1)
-      .find(np => lshPairRecall(minCos, np, nTables) >= targetRecall)
+      .find(np => lshPairRecall(minCos, np, InRegimeTables) >= InRegimeRecall)
       .getOrElse(1)
-    (nPlanes, nTables)
+    (nPlanes, InRegimeTables)
   }
 
   /** cosine(a, b) over float-array columns, computed in double — exact
@@ -434,7 +436,7 @@ object Similarity {
     * 0.95 (the near-dup design regime, spec-asserted ≥0.95) but only
     * ≈0.41 at cos 0.4 — at lower thresholds pass the in-regime config
     * from [[lshConfigFor]] (fewer planes, higher candidate volume), which
-    * is what [[Curation.curateDocs]] resolves its semantic edge family to.
+    * is what [[Curation.curateDocs]] runs its semantic edge family at.
     * Emitted pairs are always a SUBSET of the exact answer (the verify is
     * exact, spec-asserted). */
   def lshDupPairs(emb: DataFrame, minCos: Double, dim: Int,

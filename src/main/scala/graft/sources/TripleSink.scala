@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Spec
@@ -86,11 +86,10 @@ object TripleSink {
       .map(r => s"${r.bucket},${r.rows},${r.checksum}")
       .mkString("", "\n", "\n"))
 
-  /** Adds the physical subject-hash bucket column (FIXTURES.md §5). */
-  def withSubjectBucket(triples: DataFrame,
-      buckets: Int = Spec.DefaultSubjectBuckets): DataFrame =
-    triples.withColumn("subj_bucket",
-      pmod(xxhash64(col("subj")), lit(buckets.toLong)).cast("int"))
+  /** The hash bucket of a key (FIXTURES.md §5): the one definition the
+    * sink writes and DocStream's bucket-pruned history read filters on. */
+  private[graft] def bucketOf(key: Column, buckets: Int): Column =
+    pmod(xxhash64(key), lit(buckets.toLong)).cast("int")
 
   /** Write (or resume writing) the triple table.
     *
@@ -140,8 +139,7 @@ object TripleSink {
     // filter keeps every row, yet the optimizer still pushes it through a
     // union into each branch, where it splits shared subplans (the triple
     // union's URI dimension) into separately executed copies.
-    val bucketed = df.withColumn(bucketCol,
-      pmod(xxhash64(col(keyCol)), lit(buckets.toLong)).cast("int"))
+    val bucketed = df.withColumn(bucketCol, bucketOf(col(keyCol), buckets))
     val inTarget = if (target.size == buckets) bucketed
       else bucketed.filter(col(bucketCol).isin(target.toSeq: _*))
 

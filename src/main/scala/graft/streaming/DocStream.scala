@@ -131,8 +131,8 @@ object DocStream {
         .option("basePath", outPath).parquet(prior: _*)
       // bounded collect: ≤ DefaultSubjectBuckets ints
       val batchBuckets = triples
-        .select(pmod(xxhash64(col("subj")),
-          lit(Spec.DefaultSubjectBuckets.toLong)).cast("int").as("b"))
+        .select(TripleSink.bucketOf(col("subj"), Spec.DefaultSubjectBuckets)
+          .as("b"))
         .distinct().collect().map(_.getInt(0)).toSeq
       val dups = priorAll
         .filter(col("subj_bucket").isin(batchBuckets: _*))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.model.Spec
 import graft.operators._
 
 /** Dedup operator family: exact, MinHash-LSH, SimHash (builder prompt
@@ -186,21 +187,22 @@ class DedupSpec extends SparkTestBase {
   test("curateDocs: survivors pass every filter; near-dup clusters keep min") {
     import graft.operators.Curation
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    val out = Curation.curateDocs(spark, docs, keepLang = "en",
-      minQuality = 0.7, portable = true)
+    val out = Curation.curateDocs(spark, docs, portable = true)
       .as[(Long, String, Double, Long)].collect()
     assert(out.nonEmpty && out.length < docs.count())
-    assert(out.forall(_._2 == "en"))
-    assert(out.forall(_._3 >= 0.7))
+    assert(out.forall(_._2 == Spec.CurateKeepLang))
+    assert(out.forall(_._3 >= Spec.CurateMinQuality))
     // dropped near-dups: each loser's cluster min survived. Reconstruct
     // the kept set and pairs exactly as the operator does.
     val lang = TextAnalysis.langId(spark, docs).select($"id", $"lang_id")
     val qual = TextAnalysis.qualityScore(docs).select($"id", $"quality")
     val kept = docs.select($"doc_id".as("id"), $"text")
       .join(lang, "id").join(qual, "id")
-      .filter($"lang_id" === "en" && $"quality" >= 0.7)
-    val pairs = Dedup.minHashLshPairs(kept, 3, 64, 16, 0.5, idCol = "id",
-        textCol = "text", maxDocFreq = graft.model.Spec.DedupMaxDocFreq,
+      .filter($"lang_id" === Spec.CurateKeepLang &&
+        $"quality" >= Spec.CurateMinQuality)
+    val pairs = Dedup.minHashLshPairs(kept, Spec.CurateShingleN,
+        Spec.CurateNumHashes, Spec.CurateBands, Spec.CurateMinEstJaccard,
+        idCol = "id", textCol = "text", maxDocFreq = Spec.DedupMaxDocFreq,
         portable = true)
       .select($"a", $"b").as[(Long, Long)].collect()
     val canon = Canonicalizer.componentsLocalT(pairs.toSeq)
@@ -210,8 +212,7 @@ class DedupSpec extends SparkTestBase {
         s"doc $node (canonical $c): wrong survival")
     }
     // determinism
-    val again = Curation.curateDocs(spark, docs, keepLang = "en",
-      minQuality = 0.7, portable = true)
+    val again = Curation.curateDocs(spark, docs, portable = true)
       .as[(Long, String, Double, Long)].collect()
     assert(out.map(_.toString).sorted.sameElements(
       again.map(_.toString).sorted))
@@ -221,12 +222,10 @@ class DedupSpec extends SparkTestBase {
     import graft.operators.Curation
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val lexical = Curation.curateDocs(spark, docs, keepLang = "en",
-      minQuality = 0.7, portable = true)
+    val lexical = Curation.curateDocs(spark, docs, portable = true)
       .select($"doc_id").as[Long].collect().toSet
-    val semantic = Curation.curateDocs(spark, docs, keepLang = "en",
-      minQuality = 0.7, portable = true, embeddings = Some(emb),
-      minCos = 0.4)
+    val semantic = Curation.curateDocs(spark, docs, portable = true,
+      embeddings = Some(emb))
       .select($"doc_id").as[Long].collect().toSet
     // adding edges can only shrink the survivor set (cluster-min keeps the
     // min of a larger cluster, and the min of a merged cluster is one of
@@ -242,17 +241,20 @@ class DedupSpec extends SparkTestBase {
     val qual = TextAnalysis.qualityScore(docs).select($"id", $"quality")
     val kept = docs.select($"doc_id".as("id"), $"text")
       .join(lang, "id").join(qual, "id")
-      .filter($"lang_id" === "en" && $"quality" >= 0.7)
-    val lexPairs = Dedup.minHashLshPairs(kept, 3, 64, 16, 0.5, idCol = "id",
-        textCol = "text", maxDocFreq = graft.model.Spec.DedupMaxDocFreq,
+      .filter($"lang_id" === Spec.CurateKeepLang &&
+        $"quality" >= Spec.CurateMinQuality)
+    val lexPairs = Dedup.minHashLshPairs(kept, Spec.CurateShingleN,
+        Spec.CurateNumHashes, Spec.CurateBands, Spec.CurateMinEstJaccard,
+        idCol = "id", textCol = "text", maxDocFreq = Spec.DedupMaxDocFreq,
         portable = true)
       .select($"a", $"b").as[(Long, Long)].collect()
     val embKept = emb.select($"vec_id".as("id"), $"embedding".as("emb"))
       .join(kept.select("id"), Seq("id"), "left_semi")
     // the operator resolves its semantic LSH shape from the threshold's
     // in-regime curve — rebuild with the SAME resolved config
-    val (np, nt) = Similarity.lshConfigFor(0.4)
-    val semPairs = Similarity.lshDupPairs(embKept, minCos = 0.4, dim = 64,
+    val (np, nt) = Similarity.lshConfigFor(Spec.CurateSemanticMinCos)
+    val semPairs = Similarity.lshDupPairs(embKept,
+        minCos = Spec.CurateSemanticMinCos, dim = Spec.CurateEmbDim,
         nPlanes = np, nTables = nt, idCol = "id", vecCol = "emb",
         portable = true)
       .select($"a", $"b").as[(Long, Long)].collect()
@@ -264,13 +266,13 @@ class DedupSpec extends SparkTestBase {
     }
   }
 
-  test("curateDocs: impossible filters flow an EMPTY corpus through every stage") {
+  test("curateDocs: an EMPTY corpus flows through every stage") {
     import graft.operators.Curation
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    // quality can never exceed 1.0 — exercises empty kept -> empty shingle
-    // table -> empty pair graph -> CC on zero edges -> empty anti-join
-    val out = Curation.curateDocs(spark, docs, keepLang = "en",
-      minQuality = 2.0, portable = true)
+      .limit(0)
+    // empty kept -> empty shingle table -> empty pair graph -> CC on zero
+    // edges -> empty anti-join
+    val out = Curation.curateDocs(spark, docs, portable = true)
     assert(out.count() == 0)
     assert(out.columns.toSeq ==
       Seq("doc_id", "lang_id", "quality", "n_tokens"))
@@ -296,25 +298,23 @@ class DedupSpec extends SparkTestBase {
     import graft.operators.Curation
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    val dec = Curation.curationDecisions(spark, docs, keepLang = "en",
-      minQuality = 0.7, portable = true, embeddings = Some(emb),
-      minCos = 0.4).cache()
+    val dec = Curation.curationDecisions(spark, docs, portable = true,
+      embeddings = Some(emb)).cache()
     // one decision per input doc, statuses from the closed vocabulary
     assert(dec.count() == docs.count())
     val statuses = dec.select($"status").distinct().as[String].collect().toSet
     assert(statuses.subsetOf(Set("kept", "drop_lang", "drop_quality",
       "drop_exact", "drop_lexical", "drop_semantic")))
     // the kept slice IS the curateDocs survivor frame (same stages)
-    val survivors = Curation.curateDocs(spark, docs, keepLang = "en",
-      minQuality = 0.7, portable = true, embeddings = Some(emb),
-      minCos = 0.4)
+    val survivors = Curation.curateDocs(spark, docs, portable = true,
+      embeddings = Some(emb))
     val keptDec = dec.filter($"status" === "kept")
       .select($"doc_id", $"lang_id", $"quality", $"n_tokens")
     assert(keptDec.except(survivors).isEmpty &&
       survivors.except(keptDec).isEmpty)
-    // gate sanity: drop_lang count == docs whose langId isn't 'en'
+    // gate sanity: drop_lang count == docs whose langId isn't kept
     val nonEn = TextAnalysis.langId(spark, docs)
-      .filter($"lang_id" =!= "en").count()
+      .filter($"lang_id" =!= Spec.CurateKeepLang).count()
     assert(dec.filter($"status" === "drop_lang").count() == nonEn)
     // both near-dup drop families fire on this corpus (semantic would be
     // vacuously green otherwise)
@@ -933,7 +933,7 @@ class SimilaritySpec extends SparkTestBase {
     // theoretical recall ≈0.90; assert ≥0.8 EMPIRICALLY on the
     // driver-gate corpus in both hash configs, exactly the construction
     // curateDocs resolves to.
-    val minCos = graft.model.Spec.CurateSemanticMinCos
+    val minCos = Spec.CurateSemanticMinCos
     val (nPlanes, nTables) = Similarity.lshConfigFor(minCos)
     assert(Similarity.lshPairRecall(minCos, nPlanes, nTables) >= 0.9,
       "resolved config below its own design bar on the theory curve")
@@ -1117,6 +1117,20 @@ class MultimodalSpec extends SparkTestBase {
   * triple set as the batch pipeline (SURVEY.md §2.10). */
 class StreamingSpec extends SparkTestBase {
 
+  /** Appends the docs below `d%012d`(60) (synthesize's doc_id format),
+    * then the rest, to `dir`. Each write lands several part files, so a
+    * maxFilesPerTrigger = 1 stream over `dir` runs several micro-batches;
+    * both writes must hold docs, or the split is vacuous. */
+  private def writeHalves(docs: org.apache.spark.sql.Dataset[_],
+      dir: String): Unit = {
+    val cut = "d%012d".format(60)
+    val (early, later) =
+      (docs.filter(col("doc_id") < cut), docs.filter(col("doc_id") >= cut))
+    assert(!early.isEmpty && !later.isEmpty, s"one side of $cut is empty")
+    early.write.parquet(dir)
+    later.write.mode("append").parquet(dir)
+  }
+
   test("streaming windowed agg (Complete mode) equals batch tumblingCounts") {
     import spark.implicits._
     // the file stream source needs a DIRECTORY; stage the single-file
@@ -1161,15 +1175,12 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("multi-batch stream output is one exact distinct triple set") {
-    import org.apache.spark.sql.functions.col
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream2").toString
     val docs = graft.sources.InterleavedDocs.synthesize(spark, 120L, seed = 21L)
     // each write.parquet lands several part files, so maxFilesPerTrigger=1
     // runs at least two micro-batches; label triples for shared entities
     // WILL recur across the batches
-    docs.filter(col("doc_id") < "d00000060").write.parquet(s"$tmp/in")
-    docs.filter(col("doc_id") >= "d00000060").write
-      .mode("append").parquet(s"$tmp/in")
+    writeHalves(docs, s"$tmp/in")
 
     val q = graft.streaming.DocStream.run(spark, s"$tmp/in", s"$tmp/out",
       s"$tmp/ckpt", maxFilesPerTrigger = Some(1))
@@ -1200,13 +1211,10 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    import org.apache.spark.sql.functions.col
     import graft.streaming.DocStream
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream6").toString
     val docs = graft.sources.InterleavedDocs.synthesize(spark, 120L, seed = 21L)
-    docs.filter(col("doc_id") < "d00000060").write.parquet(s"$tmp/in")
-    docs.filter(col("doc_id") >= "d00000060").write
-      .mode("append").parquet(s"$tmp/in")
+    writeHalves(docs, s"$tmp/in")
     DocStream.run(spark, s"$tmp/in", s"$tmp/out", s"$tmp/ckpt",
       maxFilesPerTrigger = Some(1)).awaitTermination(120000)
     val prior = DocStream.priorBatchDirs(spark, s"$tmp/out", Long.MaxValue)
@@ -1241,12 +1249,9 @@ class StreamingSpec extends SparkTestBase {
     // comments but never failure-injected. Inject a crash between the two
     // writes of a micro-batch, restart from the same streaming checkpoint,
     // and require the final set to equal the one-shot batch run.
-    import org.apache.spark.sql.functions.col
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream4").toString
     val docs = graft.sources.InterleavedDocs.synthesize(spark, 120L, seed = 57L)
-    docs.filter(col("doc_id") < "d00000060").write.parquet(s"$tmp/in")
-    docs.filter(col("doc_id") >= "d00000060").write
-      .mode("append").parquet(s"$tmp/in")
+    writeHalves(docs, s"$tmp/in")
 
     val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
     val q1 = graft.streaming.DocStream.run(spark, s"$tmp/in", s"$tmp/out",
@@ -1286,12 +1291,9 @@ class StreamingSpec extends SparkTestBase {
 
   test("incremental CC: edges arriving in later batches re-bind earlier output") {
     import org.apache.spark.sql.functions.{col, lit}
-    import graft.model.Spec
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream3").toString
     val docs = graft.sources.InterleavedDocs.synthesize(spark, 120L, seed = 33L)
-    docs.filter(col("doc_id") < "d00000060").write.parquet(s"$tmp/in")
-    docs.filter(col("doc_id") >= "d00000060").write
-      .mode("append").parquet(s"$tmp/in")
+    writeHalves(docs, s"$tmp/in")
 
     // batch 0 sees only a PREFIX of the sameAs edges; batch 1 delivers the
     // rest — including (E_sortmerge, E_merge), which merges the already-

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.model.Spec
 import graft.operators.{Canonicalizer, Dedup, Similarity}
 import graft.sources.{InterleavedDocs, TripleSink}
 
@@ -172,8 +173,9 @@ object Bench {
     val (tProd, _) = timed {
       Dedup.minHashLshPairs(
         spark.read.parquet(s"$sfDir/documents.parquet"),
-        n = 3, numHashes = 64, bands = 16, minEstJaccard = 0.5,
-        maxDocFreq = graft.model.Spec.DedupMaxDocFreq).count()
+        n = Spec.CurateShingleN, numHashes = Spec.CurateNumHashes,
+        bands = Spec.CurateBands, minEstJaccard = Spec.CurateMinEstJaccard,
+        maxDocFreq = Spec.DedupMaxDocFreq).count()
     }
     results += "dedup_minhash_prod" -> tProd
 
@@ -191,10 +193,10 @@ object Bench {
     locally {
       val st = Dedup.shingleDocFreqStats(
         spark.read.parquet(s"$sfDir/documents.parquet"),
-        n = 3, maxDocFreq = graft.model.Spec.DedupMaxDocFreq)
+        n = 3, maxDocFreq = Spec.DedupMaxDocFreq)
         .agg(count(lit(1)), coalesce(sum(col("df")), lit(0L))).head()
       System.err.println(s"[graft] stop-shingle pruning (maxDocFreq=" +
-        s"${graft.model.Spec.DedupMaxDocFreq}): dropped ${st.getLong(0)} " +
+        s"${Spec.DedupMaxDocFreq}): dropped ${st.getLong(0)} " +
         s"shingles covering ${st.getLong(1)} doc-occurrences")
       results += "pruned_shingles" -> st.getLong(0).toDouble
       results += "pruned_shingle_docfreq_mass" -> st.getLong(1).toDouble

@@ -121,21 +121,18 @@ object OracleSql {
 
   // ----- training-data curation oracles ---------------------------------
 
-  /** Word-3-gram shingle sets per doc (mirrors Dedup.shingles, n=3,
-    * including the len(w) >= 3 short-doc guard), plus the stop-shingle
-    * pruning mirror: `shp` keeps only shingles whose doc frequency is ≤
+  /** Word-n-gram shingle sets per doc (mirrors Dedup.shingles, including
+    * the len(w) >= n short-doc guard), plus the stop-shingle pruning
+    * mirror: `shp` keeps only shingles whose doc frequency is ≤
     * Spec.DedupMaxDocFreq, exactly like the Spark side's freq join. */
-  private val shinglesCte: String =
-    """sh AS (
+  private def prunedShinglesCtes(n: Int): Seq[String] = Seq(
+    s"""sh AS (
       |  SELECT DISTINCT doc_id AS id,
-      |    unnest(list_transform(range(1, len(w) - 1),
-      |      i -> array_to_string(list_slice(w, i, i + 2), ' '))) AS shingle
+      |    unnest(list_transform(range(1, len(w) - ${n - 2}),
+      |      i -> array_to_string(list_slice(w, i, i + ${n - 1}), ' '))) AS shingle
       |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
-      |  WHERE len(w) >= 3
-      |)""".stripMargin
-
-  private val prunedShinglesCtes: Seq[String] = Seq(
-    shinglesCte,
+      |  WHERE len(w) >= $n
+      |)""".stripMargin,
     s"""shf AS (SELECT shingle FROM sh GROUP BY shingle
        | HAVING count(*) <= ${Spec.DedupMaxDocFreq})""".stripMargin
       .replace("\n", ""),
@@ -147,7 +144,7 @@ object OracleSql {
     * filter — so the hash match proves the Spark side's prefix pruning
     * lossless. */
   val jaccardPrefix: String =
-    OracleCte.withClause(prunedShinglesCtes ++ Seq(
+    OracleCte.withClause(prunedShinglesCtes(3) ++ Seq(
       "psz AS (SELECT id, CAST(count(*) AS BIGINT) AS sz " +
         "FROM shp GROUP BY id)",
       "pint AS (SELECT x.id AS a, y.id AS b, CAST(count(*) AS BIGINT) " +
@@ -159,7 +156,7 @@ object OracleSql {
       "WHERE 100 * i >= 80 * (sa.sz + sb.sz - i)"
 
   val ngramJaccard: String =
-    OracleCte.withClause(prunedShinglesCtes ++ Seq(
+    OracleCte.withClause(prunedShinglesCtes(3) ++ Seq(
       "sizes AS (SELECT id, count(*) AS sz FROM shp GROUP BY id)",
       """inter AS (
         |  SELECT x.id AS a, y.id AS b, count(*) AS i
@@ -173,19 +170,22 @@ object OracleSql {
         .stripMargin.replace("\n", "")
 
   /** MinHash + LSH banding oracle: the exact twin of
-    * Dedup.minHashLshPairs(n=3, numHashes=64, bands=16, minEst=0.5,
-    * maxDocFreq=Spec.DedupMaxDocFreq, portable=true). Slot hash =
+    * Dedup.minHashLshPairs at the Spec.Curate* MinHash operating point
+    * (shingle n, hashes, bands, min estimated Jaccard) with
+    * maxDocFreq=Spec.DedupMaxDocFreq, portable=true. Slot hash =
     * first 15 hex chars of md5("<j>:<shingle>") parsed base-16 (60 bits,
     * overflow-safe in both engines); band key = '_'-joined slot values;
     * est_jaccard = equal-slot fraction (Spark counts with the codegen'd
-    * LongSlotEq; count/64 is exact in binary, so round(…,6) agrees). */
+    * LongSlotEq; count/numHashes is exact in binary for a power-of-two
+    * numHashes, so round(…,6) agrees). */
   val minHashLsh: String = {
-    val numHashes = 64; val bands = 16; val rows = numHashes / bands
+    val numHashes = Spec.CurateNumHashes; val bands = Spec.CurateBands
+    val rows = numHashes / bands
     val slots = (0 until numHashes).map(j =>
       s"min(('0x' || substr(md5('$j:' || shingle), 1, 15))::BIGINT) AS h$j")
       .mkString(", ")
     val sigList = (0 until numHashes).map(j => s"h$j").mkString("[", ", ", "]")
-    OracleCte.withClause(prunedShinglesCtes ++ Seq(
+    OracleCte.withClause(prunedShinglesCtes(Spec.CurateShingleN) ++ Seq(
       s"""sig AS (SELECT id, $sigList AS sig FROM
          | (SELECT id, $slots FROM shp GROUP BY id))""".stripMargin
         .replace("\n", ""),
@@ -205,7 +205,8 @@ object OracleSql {
          |     i -> sa.sig[i] = sb.sig[i])) AS DOUBLE) / $numHashes, 6)
          |     AS est_jaccard
          | FROM cand c JOIN sig sa ON sa.id = c.a JOIN sig sb ON sb.id = c.b)
-         | WHERE est_jaccard >= 0.5""".stripMargin.replace("\n", "")
+         | WHERE est_jaccard >= ${Spec.CurateMinEstJaccard}""".stripMargin
+        .replace("\n", "")
   }
 
   /** SimHash near-dup oracle: brute-force all-pairs Hamming ≤ 3 over the

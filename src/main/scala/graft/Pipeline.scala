@@ -13,10 +13,12 @@ import graft.operators.{Canonicalizer, GazetteerMatcher, Linker, SpanOps}
   *
   * Stage graph:
   * {{{
-  * docs ─ posexplode ─┬─ text spans ─ AC match ─ top-1 ─┐
-  *                    └─ media spans ── passthrough ────┤
-  *      sameAs ─ connected components ─ canonical remap ┘
-  *                               predicate map ─ URI mint ─ union ─ dedup
+  * docs ─ posexplode ─┬─ text spans ─ AC match ─ top-1 ─ URI lookup ─┐
+  *                    └─ media spans ── passthrough ──────────────────┘
+  *                                    predicate map ─ union ─ dedup
+  *
+  * on the driver, once per gazetteer entity, before the plan is built:
+  * gazetteer ids ─ sameAs components ─ canonical id ─ URI mint ─ lookup map
   * }}}
   */
 object Pipeline {
@@ -50,54 +52,56 @@ object Pipeline {
   }
 
   /** Pipeline canonicalizing against a component map (entity_id,
-    * canonical): explode → match → top-1 → C4 broadcast-join remap →
-    * assemble. [[triples]] builds the map from a sameAs Seq; the streaming
-    * shim passes the local relation of its incremental CC state, the
-    * converged map for all edges seen so far
-    * ([[graft.streaming.DocStream]]). */
+    * canonical): explode → match → top-1 → URI lookup → assemble.
+    * [[triples]] builds the map from a sameAs Seq; the streaming shim
+    * passes the local relation of its incremental CC state, the converged
+    * map for all edges seen so far ([[graft.streaming.DocStream]]).
+    *
+    * C3/C4 never touch corpus rows: every entity the pipeline emits is
+    * canon(g) for some gazetteer entity g, so the whole raw-id → entity
+    * URI map has one entry per gazetteer id and is built once on the
+    * driver. The component map is read only at the gazetteer ids — no
+    * Spark job for a local relation, one gazetteer-sized job for
+    * distributed CC — and the corpus plan applies the result as a
+    * literal map lookup, like [[Linker.mapPredicates]]: no join and no
+    * sha2 on corpus rows. */
   def triplesWithComponents(spark: SparkSession, docs: Dataset[Doc],
       components: DataFrame,
       gazetteer: Seq[GazEntry] = Spec.Gazetteer): DataFrame = {
+    val gazIds = gazetteer.map(_.entity_id).distinct
+    val canon = components.where(col("entity_id").isin(gazIds: _*))
+      .select("entity_id", "canonical").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val entUri = typedLit(
+      gazIds.map(g => g -> Spec.entUri(canon.getOrElse(g, g))).toMap)
+
     val exploded = SpanOps.wellFormed(SpanOps.explodeSpans(docs))
     val cands = GazetteerMatcher.candidates(spark,
       SpanOps.textSpans(exploded), gazetteer)
-    val canon = Canonicalizer.remap(Linker.top1(cands), "entity_id",
-      components)
 
-    // G4 dedup happens BEFORE URI minting on the narrow natural keys —
-    // far cheaper than deduping full minted-URI strings. The single
-    // distinct collapses per-doc mention repetition (map-side combine) in
-    // ONE pass over the matcher output. No .cache(): base's only
-    // consumers (mentions, labels) live inside the one returned plan, so
-    // the distinct's shuffle is computed once and shared via
-    // ReusedExchange — the match+top1+remap chain runs exactly once, with
-    // disk-backed shuffle files instead of pinned executor memory and no
-    // unpersist lifecycle to leak. (The URI dimension deliberately does
-    // NOT derive from base: a broadcast subquery cannot reuse the main
-    // plan's exchange — see entUriDim.)
-    val base = canon.select(col("doc_id"), col("entity_id"), col("surface"))
+    // G4 dedup on the narrow natural keys. The single distinct collapses
+    // per-doc mention repetition (map-side combine) in ONE pass over the
+    // matcher output. No .cache(): base's only consumers (mentions,
+    // labels) live inside the one returned plan, so the distinct's
+    // shuffle is computed once and shared via ReusedExchange — the
+    // match+top1 chain runs exactly once.
+    val base = Linker.top1(cands)
+      .select(col("doc_id"),
+        element_at(entUri, col("entity_id")).as("ent_uri"), col("surface"))
       .distinct()
 
-    val mentions = base.select("doc_id", "entity_id").distinct()
+    val mentions = base.select("doc_id", "ent_uri").distinct()
       .withColumn("link_kind", lit("text_mention"))
-    val labels = base.select("entity_id", "surface").distinct()
+    val labels = base.select("ent_uri", "surface").distinct()
       .withColumn("link_kind", lit("label"))
     val media = SpanOps.mediaSpans(exploded)
       .select(col("doc_id"), col("media_ref").as("entity_id")).distinct()
       .withColumn("link_kind", lit("media"))
 
-    // Salted-hash URIs are minted once per DISTINCT canonical entity (the
-    // gazetteer-derived dimension, see entUriDim), then joined back — not
-    // sha2'd per corpus row. Broadcast at gazetteer-bounded cardinality;
-    // swap for a sort-merge join on open-world entity vocabularies.
-    val entUris = broadcast(entUriDim(spark, gazetteer, components))
-
-    val mentionTriples =
-      Linker.mapPredicates(spark, mentions.join(entUris, "entity_id"))
+    val mentionTriples = Linker.mapPredicates(spark, mentions)
       .select(Spec.docUriCol(col("doc_id")).as("subj"), col("pred"),
         col("ent_uri").as("obj"), lit("iri").as("obj_type"))
-    val labelTriples =
-      Linker.mapPredicates(spark, labels.join(entUris, "entity_id"))
+    val labelTriples = Linker.mapPredicates(spark, labels)
       .select(col("ent_uri").as("subj"), col("pred"),
         col("surface").as("obj"), lit("literal").as("obj_type"))
     val mediaTriples = Linker.mapPredicates(spark, media)
@@ -111,27 +115,5 @@ object Pipeline {
     // semantics, BASELINE.json:2). No observe(): upstream of further
     // composition it mis-binds attributes in GenerateExec on Spark 4.1.
     mentionTriples.unionByName(labelTriples).unionByName(mediaTriples)
-  }
-
-  /** Canonical entity-URI dimension minted from the GAZETTEER vocabulary,
-    * not from a corpus scan: every entity_id the pipeline can emit is
-    * canon(g) for some gazetteer entity g, so {canon(g)} — the gazetteer
-    * ids remapped through the component map (dimension × dimension join)
-    * — is a complete, dimension-sized URI key set. Minting here keeps
-    * sha2 off the corpus plan entirely AND removes the corpus-wide
-    * distinct + broadcast-subquery dependency on the match chain that a
-    * base-derived dimension had (a broadcast subplan cannot reuse the main
-    * plan's shuffle exchange, so it re-ran the whole match+top1 chain a
-    * second time — measured ~1.5× on kg_write at local[4]). */
-  private def entUriDim(spark: SparkSession, gazetteer: Seq[GazEntry],
-      components: DataFrame): DataFrame = {
-    import spark.implicits._
-    val dim = spark.createDataset(gazetteer.map(_.entity_id).distinct.sorted)
-      .toDF("entity_id")
-    // one partition: gazetteer-sized rows need no shuffle (and no extra
-    // job) for the distinct
-    Canonicalizer.remap(dim, "entity_id", components)
-      .coalesce(1).distinct()
-      .withColumn("ent_uri", Spec.entUriCol(col("entity_id")))
   }
 }

@@ -238,7 +238,8 @@ object SparkEntry {
     // pairs is additionally property-tested in DedupSpec.
     "dedup_minhash_lsh" -> ((s, dir) =>
       Dedup.minHashLshPairs(s.read.parquet(s"$dir/documents.parquet"),
-        n = 3, numHashes = 64, bands = 16, minEstJaccard = 0.5,
+        n = Spec.CurateShingleN, numHashes = Spec.CurateNumHashes,
+        bands = Spec.CurateBands, minEstJaccard = Spec.CurateMinEstJaccard,
         maxDocFreq = Spec.DedupMaxDocFreq, portable = true)),
 
     "dedup_simhash" -> ((s, dir) =>

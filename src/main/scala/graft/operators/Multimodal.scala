@@ -23,8 +23,6 @@ object Multimodal {
       content: Array[Byte])
   final case class DecodedMedia(media_ref: String, media_type: String,
       width: Int, height: Int, n_frames: Int, bytes_len: Long)
-  final case class FrameSample(media_ref: String, frame_idx: Int,
-      frame_hash: Long)
 
   /** STUB codec: deterministic fake. Byte layout written by
     * [[synthesizeAssets]]: [0..3] width, [4..7] height, [8..11] frames
@@ -35,12 +33,6 @@ object Multimodal {
         ((content(o) & 0xff) << 24) | ((content(o + 1) & 0xff) << 16) |
           ((content(o + 2) & 0xff) << 8) | (content(o + 3) & 0xff)
       (be(0), be(4), be(8))
-    }
-    def frameHash(content: Array[Byte], frameIdx: Int): Long = {
-      var h = 1125899906842597L
-      var i = 0
-      while (i < content.length) { h = 31 * h + content(i) + frameIdx; i += 1 }
-      h
     }
   }
 
@@ -73,32 +65,4 @@ object Multimodal {
         if (a.media_type == "video") f else 1, a.content.length.toLong)
     })
   }
-
-  /** Frame sampling: every `stride`-th frame of video assets, 1→N rows
-    * per asset (generator shape). */
-  def sampleFrames(spark: SparkSession, assets: Dataset[MediaAsset],
-      stride: Int = 10): Dataset[FrameSample] = {
-    import spark.implicits._
-    assets.mapPartitions(_.flatMap { a =>
-      val (_, _, f) = FakeCodec.decode(a.content)
-      val n = if (a.media_type == "video") f else 1
-      (0 until n by stride).iterator.map(i =>
-        FrameSample(a.media_ref, i, FakeCodec.frameHash(a.content, i)))
-    })
-  }
-
-  /** Resize-plan metadata op (pure relational on decoded metadata):
-    * target box fit preserving aspect ratio — integer math only, so it is
-    * exactly reproducible. */
-  def resizePlan(decoded: Dataset[DecodedMedia], maxSide: Int = 256): DataFrame =
-    decoded.toDF().select(col("media_ref"),
-      col("width"), col("height"),
-      when(greatest(col("width"), col("height")) <= maxSide, col("width"))
-        .otherwise(round(col("width") * maxSide /
-          greatest(col("width"), col("height"))))
-        .cast("int").as("target_w"),
-      when(greatest(col("width"), col("height")) <= maxSide, col("height"))
-        .otherwise(round(col("height") * maxSide /
-          greatest(col("width"), col("height"))))
-        .cast("int").as("target_h"))
 }

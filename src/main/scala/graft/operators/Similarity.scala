@@ -119,16 +119,11 @@ object Similarity {
 
   /** Bucket bits over an ALREADY-double vector column (no per-plane cast). */
   private def bucketBits(vd: Column, dim: Int, nPlanes: Int, t: Int,
-      portable: Boolean = false): Column =
+      portable: Boolean): Column =
     planes(t, nPlanes, dim, portable).zipWithIndex.map { case (p, j) =>
       when(vdot(vd, typedLit(p.toSeq)) >= 0, shiftleft(lit(1L), j))
         .otherwise(lit(0L))
     }.reduce((a, b) => a.bitwiseOR(b))
-
-  /** Sign-LSH bucket id for table `t`: one bit per hyperplane, each a
-    * codegen'd dot against a literal plane vector. */
-  def lshBucket(vec: Column, dim: Int, nPlanes: Int, t: Int = 0): Column =
-    bucketBits(transform(vec, x => x.cast("double")), dim, nPlanes, t)
 
   /** ANN top-k via multi-table sign-LSH with query-side 1-bit multi-probe:
     * `nTables` independent hyperplane sets; the DATA side sits in exactly

@@ -137,8 +137,9 @@ object TripleSink {
 
     // Filter only on a resume or `onlyBuckets` run. On a fresh write the
     // filter keeps every row, yet the optimizer still pushes it through a
-    // union into each branch, where it splits shared subplans (the triple
-    // union's URI dimension) into separately executed copies.
+    // union into each branch, where it splits shared subplans (the
+    // distinct the mention and label branches share) into separately
+    // executed copies.
     val bucketed = df.withColumn(bucketCol, bucketOf(col(keyCol), buckets))
     val inTarget = if (target.size == buckets) bucketed
       else bucketed.filter(col(bucketCol).isin(target.toSeq: _*))

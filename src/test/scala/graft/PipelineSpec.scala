@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, lit}
+
 import graft.model._
 import graft.sources.InterleavedDocs
 
@@ -88,5 +90,63 @@ class PipelineSpec extends SparkTestBase {
     val actual = sparkTriples(docs)
     assert(actual == expected,
       s"onlySpark=${actual -- expected} onlyOracle=${expected -- actual}")
+  }
+
+  test("driver entUri equals the column entUriCol byte for byte") {
+    import org.scalacheck.{Arbitrary, Gen, Prop, Test}
+    import spark.implicits._
+    // the pipeline mints on the driver, while DocStream.currentView and
+    // the canon_uri query mint with the column form
+    val supplementary = Gen.choose(0x10000, 0x10FFFF)
+      .map(cp => new String(Character.toChars(cp)))
+    val piece = Gen.frequency(
+      4 -> Arbitrary.arbitrary[String],
+      2 -> Gen.asciiStr,
+      2 -> Gen.stringOf(Gen.choose(0.toChar, 0x1f.toChar)), // control chars
+      2 -> Gen.stringOf(Gen.oneOf("éßøπж中文字ﬁ\u200b\u00a0".toSeq)),
+      2 -> Gen.listOf(supplementary).map(_.mkString))
+    val str = Gen.choose(1, 3).flatMap(Gen.listOfN(_, piece)).map(_.mkString)
+    val fixed = Seq("", "\u0000", "\t\n\r", "E_customer", "ü", "中文",
+      "\ud83d\ude00", "a\ud800\udc00b")
+    def agree(xs: Seq[String]): Boolean = {
+      val want = xs.map(Spec.entUri)
+      val lits = spark.range(1)
+        .select(xs.map(x => Spec.entUriCol(lit(x))): _*).head()
+      val rows = xs.toDF("id").select(Spec.entUriCol(col("id")))
+        .as[String].collect().toSeq
+      val ok = xs.indices.forall(i => lits.getString(i) == want(i)) &&
+        rows == want
+      if (!ok) info(s"disagree on ${xs.map(_.codePoints.toArray.toSeq)}")
+      ok
+    }
+    assert(agree(fixed))
+    val prop = Prop.forAllNoShrink(Gen.listOfN(40, str))(agree)
+    val result = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(10).withInitialSeed(11L), prop)
+    assert(result.passed, result.status.toString)
+  }
+
+  test("triple plan runs no join and no broadcast on every caller's path") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.streaming.DocStream
+    val docs = InterleavedDocs.fromDocuments(spark, "/root/testdata/sf0.001")
+    val state = java.nio.file.Files.createTempDirectory("graft-plan").toString
+    val plans: Seq[(String, DataFrame)] = Seq(
+      "default" -> Pipeline.triples(spark, docs),
+      "atScale" -> Pipeline.triples(spark, docs, atScale = true),
+      "stream" -> Pipeline.triplesWithComponents(spark, docs,
+        DocStream.advanceComponents(spark, state, 0L, Spec.SameAs)))
+    val aqe = new AdaptiveSparkPlanHelper {}
+    for ((name, df) <- plans) {
+      assert(df.collect().nonEmpty, name)
+      val plan = df.queryExecution.executedPlan
+      val joins = aqe.collect(plan) { case j: BaseJoinExec => j }
+      val bcasts = aqe.collect(plan) { case b: BroadcastExchangeExec => b }
+      assert(joins.isEmpty && bcasts.isEmpty,
+        s"$name: ${joins.length} joins, ${bcasts.length} broadcasts:\n$plan")
+    }
   }
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{Doc, GazEntry, SameAsEdge, Spec}
-import graft.operators.{Canonicalizer, GazetteerMatcher, Linker, SpanOps}
+import graft.operators.{ACAutomaton, Canonicalizer, GazetteerMatcher, Linker,
+  SpanOps}
 
 /** The end-to-end KG-construction plan: Dataset[Doc] → DataFrame of triples
   * (subj, pred, obj, obj_type), all Catalyst — one declarative plan per
@@ -13,12 +14,12 @@ import graft.operators.{Canonicalizer, GazetteerMatcher, Linker, SpanOps}
   *
   * Stage graph:
   * {{{
-  * docs ─ posexplode ─┬─ text spans ─ AC match ─ top-1 ─ URI lookup ─┐
-  *                    └─ media spans ── passthrough ──────────────────┘
-  *                                    predicate map ─ union ─ dedup
+  * docs ─ posexplode ─ wellFormed ─┬─ text span ── AC match ── URI lookup ─┐
+  *   (one scan, one mapPartitions) └─ media span ── passthrough ───────────┤
+  *              distinct (link_kind, a, b) ─ predicate map + URI mint ─────┘
   *
-  * on the driver, once per gazetteer entity, before the plan is built:
-  * gazetteer ids ─ sameAs components ─ canonical id ─ URI mint ─ lookup map
+  * on the driver, once per gazetteer surface, before the plan is built:
+  * surface ─ top-1 entity ─ sameAs canonical id ─ URI mint ─ lookup map
   * }}}
   */
 object Pipeline {
@@ -52,68 +53,63 @@ object Pipeline {
   }
 
   /** Pipeline canonicalizing against a component map (entity_id,
-    * canonical): explode → match → top-1 → URI lookup → assemble.
-    * [[triples]] builds the map from a sameAs Seq; the streaming shim
-    * passes the local relation of its incremental CC state, the converged
-    * map for all edges seen so far ([[graft.streaming.DocStream]]).
+    * canonical) in one corpus pass. [[triples]] builds the map from a
+    * sameAs Seq; the streaming shim passes the local relation of its
+    * incremental CC state ([[graft.streaming.DocStream]]).
     *
-    * C3/C4 never touch corpus rows: every entity the pipeline emits is
-    * canon(g) for some gazetteer entity g, so the whole raw-id → entity
-    * URI map has one entry per gazetteer id and is built once on the
-    * driver. The component map is read only at the gazetteer ids — no
-    * Spark job for a local relation, one gazetteer-sized job for
-    * distributed CC — and the corpus plan applies the result as a
-    * literal map lookup, like [[Linker.mapPredicates]]: no join and no
-    * sha2 on corpus rows. */
+    * M5, C3 and C4 never touch corpus rows: all candidates of a mention
+    * share its surface, and [[Spec.scoreOf]] reads only the gazetteer
+    * entry, so the top-1 winner (τ, score desc, entity_id asc), its
+    * canonical id and its URI are one fact per surface, decided here on
+    * the driver. The component map is read only at the gazetteer ids (no
+    * job for a local relation). A surface with nothing at or above τ has
+    * no entry: its mentions still win overlap resolution, but link
+    * nothing. Top-1 is per input row, like the per-document test oracle;
+    * [[Linker.top1]] groups (doc_id, span_pos, begin) across rows, which
+    * agrees whenever doc_id is a key. */
   def triplesWithComponents(spark: SparkSession, docs: Dataset[Doc],
       components: DataFrame,
       gazetteer: Seq[GazEntry] = Spec.Gazetteer): DataFrame = {
+    import spark.implicits._
     val gazIds = gazetteer.map(_.entity_id).distinct
     val canon = components.where(col("entity_id").isin(gazIds: _*))
       .select("entity_id", "canonical").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
-    val entUri = typedLit(
-      gazIds.map(g => g -> Spec.entUri(canon.getOrElse(g, g))).toMap)
+    val automaton = ACAutomaton.build(gazetteer)
+    val entUri: Map[String, String] = automaton.patterns.flatMap { p =>
+      p.entities.map { case (e, prior) => (e, Spec.scoreOf(prior, p.surface)) }
+        .filter(_._2 >= Spec.ScoreThreshold)
+        .minByOption { case (e, score) => (-score, e) }
+        .map { case (e, _) => p.surface -> Spec.entUri(canon.getOrElse(e, e)) }
+    }.toMap
+    val bc = spark.sparkContext.broadcast(automaton)
 
-    val exploded = SpanOps.wellFormed(SpanOps.explodeSpans(docs))
-    val cands = GazetteerMatcher.candidates(spark,
-      SpanOps.textSpans(exploded), gazetteer)
+    // G4: one distinct on narrow keys (doc_id, media_ref),
+    // (doc_id, ent_uri) or (ent_uri, surface). Each link kind is one
+    // predicate and its (subj, obj) is injective in (a, b), so this is
+    // the exact (subj, pred, obj) set (BASELINE.json:2).
+    val links = SpanOps.wellFormed(SpanOps.explodeSpans(docs))
+      .select("doc_id", "kind", "text", "media_ref")
+      .as[(String, String, String, String)]
+      .mapPartitions { it =>
+        val ac = bc.value
+        it.flatMap { case (docId, kind, text, mediaRef) =>
+          if (kind == "media") Iterator(("media", docId, mediaRef))
+          else GazetteerMatcher.spanMentions(ac, text).flatMap {
+            case (_, _, p) => entUri.get(p.surface).iterator.flatMap { u =>
+              Iterator(("text_mention", docId, u), ("label", u, p.surface))
+            }
+          }
+        }
+      }
+      .toDF("link_kind", "a", "b").distinct()
 
-    // G4 dedup on the narrow natural keys. The single distinct collapses
-    // per-doc mention repetition (map-side combine) in ONE pass over the
-    // matcher output. No .cache(): base's only consumers (mentions,
-    // labels) live inside the one returned plan, so the distinct's
-    // shuffle is computed once and shared via ReusedExchange — the
-    // match+top1 chain runs exactly once.
-    val base = Linker.top1(cands)
-      .select(col("doc_id"),
-        element_at(entUri, col("entity_id")).as("ent_uri"), col("surface"))
-      .distinct()
-
-    val mentions = base.select("doc_id", "ent_uri").distinct()
-      .withColumn("link_kind", lit("text_mention"))
-    val labels = base.select("ent_uri", "surface").distinct()
-      .withColumn("link_kind", lit("label"))
-    val media = SpanOps.mediaSpans(exploded)
-      .select(col("doc_id"), col("media_ref").as("entity_id")).distinct()
-      .withColumn("link_kind", lit("media"))
-
-    val mentionTriples = Linker.mapPredicates(spark, mentions)
-      .select(Spec.docUriCol(col("doc_id")).as("subj"), col("pred"),
-        col("ent_uri").as("obj"), lit("iri").as("obj_type"))
-    val labelTriples = Linker.mapPredicates(spark, labels)
-      .select(col("ent_uri").as("subj"), col("pred"),
-        col("surface").as("obj"), lit("literal").as("obj_type"))
-    val mediaTriples = Linker.mapPredicates(spark, media)
-      .select(Spec.docUriCol(col("doc_id")).as("subj"), col("pred"),
-        Spec.mediaUriCol(col("entity_id")).as("obj"),
-        lit("iri").as("obj_type"))
-
-    // Each branch is internally distinct and the three predicates are
-    // disjoint, so the union IS the deduped (subj, pred, obj) set — no
-    // final corpus-wide dropDuplicates shuffle needed (exact set
-    // semantics, BASELINE.json:2). No observe(): upstream of further
-    // composition it mis-binds attributes in GenerateExec on Spark 4.1.
-    mentionTriples.unionByName(labelTriples).unionByName(mediaTriples)
+    val isLabel = col("link_kind") === "label"
+    Linker.mapPredicates(links).select(
+      when(isLabel, col("a")).otherwise(Spec.docUriCol(col("a"))).as("subj"),
+      col("pred"),
+      when(col("link_kind") === "media", Spec.mediaUriCol(col("b")))
+        .otherwise(col("b")).as("obj"),
+      when(isLabel, lit("literal")).otherwise(lit("iri")).as("obj_type"))
   }
 }

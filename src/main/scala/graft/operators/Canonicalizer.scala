@@ -260,7 +260,7 @@ object Canonicalizer extends Serializable {
     * component stay themselves. The map is broadcast: it has one row per
     * sameAs node, dimension-sized next to the rows it rewrites. The
     * pipeline does not call this: it resolves canonical ids once per
-    * gazetteer entity on the driver ([[graft.Pipeline.triplesWithComponents]]). */
+    * gazetteer surface on the driver ([[graft.Pipeline.triplesWithComponents]]). */
   def remap(df: DataFrame, idCol: String,
       components: DataFrame): DataFrame = {
     val comp = broadcast(components.withColumnRenamed("entity_id", idCol))

@@ -142,6 +142,19 @@ object GazetteerMatcher {
     kept.sortBy(_._1._1).map(_._2).toList
   }
 
+  /** M1–M3 on one span: the kept mentions of `text` as (begin, end,
+    * pattern), char offsets into the span text, end exclusive. The one
+    * per-span match of [[candidates]] and [[graft.Pipeline]]. */
+  def spanMentions(ac: ACAutomaton, text: String)
+      : Iterator[(Int, Int, ACAutomaton.Pattern)] = {
+    val toks = tokenize(text)
+    resolveOverlaps(ac.matches(toks.map(_._1)), toks, ac).iterator.map {
+      case (ts, te, pid) =>
+        (toks(ts)._2, toks(te - 1)._2 + toks(te - 1)._1.length,
+          ac.patterns(pid))
+    }
+  }
+
   /** Match text spans (doc_id, pos, text rows) against the broadcast
     * automaton; emit one CandidateLink per (kept mention × candidate
     * entity), with the frozen score prior + 0.1*len(surface).
@@ -161,18 +174,11 @@ object GazetteerMatcher {
           if (text == null || text.isEmpty) {
             counters.foreach(_.emptySpans.add(1))
             Iterator.empty
-          } else {
-            val toks = tokenize(text)
-            val kept = resolveOverlaps(ac.matches(toks.map(_._1)), toks, ac)
-            kept.iterator.flatMap { case (ts, te, pid) =>
-              val p = ac.patterns(pid)
-              counters.foreach(_.mentions.add(1))
-              val begin = toks(ts)._2
-              val end = toks(te - 1)._2 + toks(te - 1)._1.length
-              p.entities.iterator.map { case (eid, prior) =>
-                CandidateLink(docId, pos, begin, end, p.surface, eid, prior,
-                  Spec.scoreOf(prior, p.surface))
-              }
+          } else spanMentions(ac, text).flatMap { case (begin, end, p) =>
+            counters.foreach(_.mentions.add(1))
+            p.entities.iterator.map { case (eid, prior) =>
+              CandidateLink(docId, pos, begin, end, p.surface, eid, prior,
+                Spec.scoreOf(prior, p.surface))
             }
           }
         }

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.model.{CandidateLink, Spec}
@@ -11,24 +10,17 @@ object Linker {
 
   /** M5: top-1 candidate per mention (doc_id, span_pos, begin), frozen
     * tie-break (score desc, entity_id asc); threshold τ = 0.0 (FIXTURES.md
-    * §4).
+    * §4). The `top1_link` query runs it over candidate rows;
+    * [[graft.Pipeline]] decides the same winner once per gazetteer
+    * surface on the driver instead.
     *
-    * Implemented as min_by over the composite order key (−score,
-    * entity_id) — an aggregate with map-side partial combine, not a
-    * window: a row_number window would shuffle EVERY candidate row and
-    * sort by (group, order) globally, while the aggregate collapses
-    * per-mention groups before the exchange. The executed plan is a
-    * SortAggregate, not a hash aggregate (round-5 judge finding: min_by's
-    * aggregation buffer holds the value/order STRUCTS, and struct buffers
-    * are not mutable-hash-aggregable, so Spark falls back to sorting each
-    * task by the group key) — the partial-combine property this design
-    * relies on is intact either way, and the per-task group-key sort is
-    * bounded by task input. Measured at sf0.1/local[32]: 1.09–1.28 s
-    * wall, indistinguishable from the round-4 numbers; an object-hash
-    * form would need a min(packed-primitive) agg PLUS a join back to
-    * recover the row — an extra corpus-sized shuffle that costs more than
-    * the sort it removes. Deterministic: the order key is unique per
-    * group (one row per mention × entity). */
+    * min_by over the composite order key (−score, entity_id): an
+    * aggregate with map-side partial combine, not a row_number window
+    * that would shuffle and globally sort every candidate row. It plans
+    * as a SortAggregate (min_by's struct buffers are not
+    * hash-aggregable), so each task sorts its input by the group key;
+    * the partial combine is intact. Deterministic: the order key is
+    * unique per group (one row per mention × entity). */
   def top1(candidates: Dataset[CandidateLink]): DataFrame =
     candidates.toDF()
       .filter(col("score") >= Spec.ScoreThreshold)
@@ -55,7 +47,7 @@ object Linker {
     * so every pipeline path applies it as a literal map() lookup — pure
     * expression, zero broadcast jobs. Input must carry a `link_kind`
     * column. */
-  def mapPredicates(spark: SparkSession, links: DataFrame): DataFrame = {
+  def mapPredicates(links: DataFrame): DataFrame = {
     val m = map(Spec.PredicateMap.toSeq
       .flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
     links.withColumn("pred", element_at(m, col("link_kind")))

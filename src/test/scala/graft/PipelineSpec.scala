@@ -11,10 +11,11 @@ class PipelineSpec extends SparkTestBase {
 
   private def sparkTriples(docs: Seq[Doc],
       sameAs: Seq[SameAsEdge] = Spec.SameAs,
-      atScale: Boolean = false): Set[SequentialOracle.T] = {
+      atScale: Boolean = false,
+      gazetteer: Seq[GazEntry] = Spec.Gazetteer): Set[SequentialOracle.T] = {
     import spark.implicits._
     val ds = spark.createDataset(docs)
-    Pipeline.triples(spark, ds, sameAs = sameAs, atScale = atScale)
+    Pipeline.triples(spark, ds, gazetteer, sameAs, atScale)
       .collect()
       .map(r => SequentialOracle.T(r.getString(0), r.getString(1),
         r.getString(2), r.getString(3)))
@@ -126,10 +127,72 @@ class PipelineSpec extends SparkTestBase {
     assert(result.passed, result.status.toString)
   }
 
+  test("pipeline equals the per-document reference on random inputs") {
+    import org.scalacheck.{Gen, Prop, Test}
+    val words = Seq("alpha", "beta", "gamma", "delta")
+    val surface = Gen.choose(1, 3).flatMap(Gen.listOfN(_, Gen.oneOf(words)))
+      .map(_.mkString(" "))
+    // negative priors put whole surfaces below τ; -0.5 on a 5-letter
+    // surface scores exactly τ; repeated priors make score ties
+    val prior = Gen.oneOf(-3.0, -1.0, -0.5, 0.0, 0.5, 0.5, 0.9)
+    val entities = Seq("E0", "E1", "E2", "E3", "E4")
+    // a few surfaces per gazetteer, so surfaces are shared by several
+    // entities and entities sit under several surfaces; each tie copy is
+    // a second entity at the same surface and prior
+    val gazetteer = for {
+      pool <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, surface))
+      es <- Gen.choose(0, 10).flatMap(Gen.listOfN(_, for {
+        s <- Gen.oneOf(pool); e <- Gen.oneOf(entities); p <- prior
+      } yield GazEntry(s, e, p)))
+      ties <- Gen.someOf(es)
+    } yield es ++ ties.map(e => e.copy(entity_id = e.entity_id + "t"))
+    val edge = for {
+      a <- Gen.oneOf(entities :+ "E0t")
+      b <- Gen.oneOf(entities :+ "E9")
+    } yield SameAsEdge(a, b)
+    val text = Gen.frequency(
+      1 -> Gen.const(null: String), 1 -> Gen.const(""),
+      6 -> Gen.listOf(Gen.oneOf(words ++ Seq("ALPHA", "x", "", "beta  gamma")))
+        .map(_.mkString(" ")))
+    val span = for {
+      kind <- Gen.frequency(6 -> "text", 3 -> "media", 1 -> "other")
+      t <- text
+      m <- Gen.oneOf(null: String, "m/1", "m/2")
+      off <- Gen.choose(-2, 30)
+    } yield Span(kind, t, m, off)
+    val doc = for {
+      id <- Gen.oneOf("d0", "d1", "d2", "d3") // shared ids, differing rows
+      spans <- Gen.choose(0, 4).flatMap(Gen.listOfN(_, span))
+    } yield Doc(id, spans)
+    val docs = Gen.choose(0, 8).flatMap(Gen.listOfN(_, doc))
+      .flatMap(ds => Gen.someOf(ds).map(ds ++ _)) // exact duplicate rows
+    def agrees(ds: Seq[Doc], gaz: Seq[GazEntry],
+        sameAs: Seq[SameAsEdge]): Boolean = {
+      val want = SequentialOracle.triples(ds, gaz, sameAs)
+      val got = sparkTriples(ds, sameAs, gazetteer = gaz)
+      if (got != want) info(s"docs=$ds gaz=$gaz sameAs=$sameAs " +
+        s"onlyPipeline=${got -- want} onlyReference=${want -- got}")
+      got == want
+    }
+    // two rows of d0 with different mentions at (span 0, begin 0): top-1
+    // per row links both, top-1 grouped across rows keeps only E1
+    assert(agrees(Seq(Doc("d0", Seq(Span("text", "alpha beta", null, 0))),
+        Doc("d0", Seq(Span("text", "alpha", null, 0)))),
+      Seq(GazEntry("alpha beta", "E1", 0.5), GazEntry("alpha", "E2", 0.5)),
+      Nil))
+    val prop = Prop.forAllNoShrink(docs, gazetteer, Gen.listOf(edge))(agrees)
+    val result = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(40).withInitialSeed(23L), prop)
+    assert(result.passed, result.status.toString)
+  }
+
   test("triple plan runs no join and no broadcast on every caller's path") {
     import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+      ShuffleExchangeExec}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     import graft.streaming.DocStream
     val docs = InterleavedDocs.fromDocuments(spark, "/root/testdata/sf0.001")
@@ -147,6 +210,14 @@ class PipelineSpec extends SparkTestBase {
       val bcasts = aqe.collect(plan) { case b: BroadcastExchangeExec => b }
       assert(joins.isEmpty && bcasts.isEmpty,
         s"$name: ${joins.length} joins, ${bcasts.length} broadcasts:\n$plan")
+      // one corpus pass: one documents scan, the one distinct's exchange,
+      // and no top-1 aggregate (Linker.top1's min_by plans a SortAggregate)
+      val scans = aqe.collect(plan) { case f: FileSourceScanExec => f }
+      val shuffles = aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+      val sortAggs = aqe.collect(plan) { case a: SortAggregateExec => a }
+      assert(scans.length == 1 && shuffles.length == 1 && sortAggs.isEmpty,
+        s"$name: ${scans.length} scans, ${shuffles.length} shuffles, " +
+          s"${sortAggs.length} sort aggregates:\n$plan")
     }
   }
 }

@@ -59,6 +59,7 @@ object SequentialOracle {
     docs.foreach { doc =>
       doc.spans.zipWithIndex.foreach { case (span, _) =>
         span.kind match {
+          case _ if span.offset < 0 => // malformed span: dropped (P3)
           case "media" if span.media_ref != null =>
             out += T(Spec.docUri(doc.doc_id), Spec.PredMedia,
               Spec.mediaUri(span.media_ref), "iri")
@@ -83,17 +84,20 @@ object SequentialOracle {
                   if (acc.exists(k => m._1 < k._2 && k._1 < m._2)) acc
                   else acc :+ m
               }
-            // top-1 per mention: score desc, entity_id asc
+            // top-1 per mention: score desc, entity_id asc; a mention
+            // with no candidate at or above τ links nothing
             kept.foreach { case (_, _, surface, ents) =>
-              val (eid, _) = ents
+              ents
                 .map { case (e, p) => (e, Spec.scoreOf(p, surface)) }
                 .filter(_._2 >= Spec.ScoreThreshold)
                 .sortBy { case (e, sc) => (-sc, e) }
-                .head
-              val c = canonical(eid)
-              out += T(Spec.docUri(doc.doc_id), Spec.PredTextMention,
-                Spec.entUri(c), "iri")
-              out += T(Spec.entUri(c), Spec.PredLabel, surface, "literal")
+                .headOption
+                .foreach { case (eid, _) =>
+                  val c = canonical(eid)
+                  out += T(Spec.docUri(doc.doc_id), Spec.PredTextMention,
+                    Spec.entUri(c), "iri")
+                  out += T(Spec.entUri(c), Spec.PredLabel, surface, "literal")
+                }
             }
           case _ => // malformed span: dropped (P3)
         }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import graft.model.Spec
 
 /** S5/S7: the materialized triple table — partitioned by subject-hash
-  * bucket, hash-partitioned on the bucket, every file sorted by (subj,
+  * bucket, hash-partitioned on the subject, every file sorted by (subj,
   * pred, obj), with a JSON-lines manifest carrying per-bucket lineage (row
   * count + content checksum of the rows written) for checkpoint-resume
   * (BASELINE.json:6,14; SURVEY.md §2.1, §7 M4).
@@ -87,9 +87,32 @@ object TripleSink {
       .mkString("", "\n", "\n"))
 
   /** The hash bucket of a key (FIXTURES.md §5): the one definition the
-    * sink writes and DocStream's bucket-pruned history read filters on. */
+    * sink writes and DocStream's bucket-pruned history read filters on.
+    * It is Spark's own hash partition id of the key, `pmod(hash(key), B)`
+    * (Murmur3, seed 42, as `HashPartitioning` computes it), so an
+    * exchange from [[bucketPartitioned]] lands every row in a partition
+    * of its own bucket. Tables written before this definition (it was
+    * `pmod(xxhash64(key), B)`) hold their rows under other buckets: they
+    * cannot be resumed or appended to. */
   private[graft] def bucketOf(key: Column, buckets: Int): Column =
-    pmod(xxhash64(key), lit(buckets.toLong)).cast("int")
+    pmod(hash(key), lit(buckets))
+
+  /** `df` hash-partitioned on `keyCol` into the bucketed write's
+    * partition count, `buckets · ⌈max(buckets, P) / buckets⌉` with P =
+    * spark.sql.shuffle.partitions. That count is a multiple of
+    * `buckets`, so partition p holds rows of bucket p mod `buckets`
+    * only: each bucket is written by ⌈max(buckets, P) / buckets⌉ tasks,
+    * each task writes one bucket. The explicit count also keeps AQE
+    * from coalescing the partitions (C6). [[graft.Pipeline]] partitions
+    * its distinct this way, so the write's identical exchange is
+    * dropped from the plan (`EnsureRequirements` removes a repartition
+    * whose child already has its hash partitioning). */
+  private[graft] def bucketPartitioned(spark: SparkSession, df: DataFrame,
+      keyCol: String, buckets: Int): DataFrame = {
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    df.repartition(buckets * ((math.max(buckets, partitions) + buckets - 1) /
+      buckets), col(keyCol))
+  }
 
   /** Write (or resume writing) the triple table.
     *
@@ -116,11 +139,11 @@ object TripleSink {
     * checksum) lineage appended to the manifest. No cache: the input plan
     * runs once, in the write. Resume as documented on [[writeTriples]].
     *
-    * The write runs max(`buckets`, spark.sql.shuffle.partitions) tasks:
-    * with more partitions than buckets, a salt of `keyCol` splits each
-    * bucket into ceil(partitions / buckets) parts, one file each. The
-    * exchange hashes its keys, so two can share a task (16 buckets land in
-    * 10 of 16 partitions).
+    * The write runs the tasks of [[bucketPartitioned]]: each holds
+    * exactly one bucket, or a 1/k slice of one when there are k times
+    * more shuffle partitions than buckets, and writes one file. When `df`
+    * is already partitioned that way (the [[graft.Pipeline]] triples at
+    * the default bucket count), the write adds no exchange.
     *
     * Lineage is observed on the rows the write tasks consume (two
     * aggregates per target bucket, counted once per committed partition),
@@ -144,27 +167,24 @@ object TripleSink {
     val inTarget = if (target.size == buckets) bucketed
       else bucketed.filter(col(bucketCol).isin(target.toSeq: _*))
 
-    // C6: the explicit count keeps AQE from coalescing the write tasks
-    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val salts = (partitions + buckets - 1) / buckets
-    val keys = col(bucketCol) +: (if (salts == 1) Nil
-      else Seq(pmod(hash(col(keyCol)), lit(salts))))
     val order = target.toSeq.sorted
     // bit_xor: order-independent content checksum that cannot overflow
-    // under ANSI mode (a long sum would throw)
+    // under ANSI mode (a long sum would throw). The row hash is a column,
+    // computed once per row rather than once per target bucket.
+    val rowHash = "_graft_row_hash"
     val stats = order.flatMap { b =>
       val in = col(bucketCol) === b
       Seq(count_if(in).as(s"rows_$b"), coalesce(bit_xor(when(in,
-        xxhash64(contentCols.map(col): _*))), lit(0L)).as(s"checksum_$b"))
+        col(rowHash))), lit(0L)).as(s"checksum_$b"))
     }
     val observed = Observation()
     // Observed after the exchange, in the stage that writes. The sort
     // leads with the partition column, so it meets the writer's required
     // ordering: Spark adds no sort of its own (which would replace this
     // one) and every file is content-sorted.
-    inTarget
-      .repartition(math.max(buckets, partitions), keys: _*)
-      .observe(observed, stats.head, stats.tail: _*)
+    bucketPartitioned(spark, inTarget, keyCol, buckets)
+      .withColumn(rowHash, xxhash64(contentCols.map(col): _*))
+      .observe(observed, stats.head, stats.tail: _*).drop(rowHash)
       .sortWithinPartitions((bucketCol +: contentCols).map(col): _*)
       .write
       .mode("overwrite")

@@ -100,9 +100,9 @@ object DocStream {
           sameAsForBatch(batchId))
         failpoint("after_state_write", batchId)
         // comps is a local relation, so the batch plan scans no state
-        // file; the batch triple set feeds up to three jobs below
-        // (bucket-set agg, broadcast key build, final write) — cache once;
-        // trigger-bounded, unpersisted before the batch completes
+        // file; the batch triple set feeds up to two jobs below (the key
+        // collect and the final write) — cache once; trigger-bounded,
+        // unpersisted before the batch completes
         val triples = Pipeline.triplesWithComponents(s, batch, comps).cache()
         try {
           val novel = dedupAgainstPrior(s, triples, outPath,
@@ -114,11 +114,12 @@ object DocStream {
       .start()
 
   /** The micro-batch cross-batch dedup (run's scale-shape doc above):
-    * bucket-pruned history scan → broadcast left-semi against the new
-    * batch's key set → broadcast left-anti of the batch against the
-    * surviving intersection. `triples` should be cached by the caller (it
-    * feeds the bucket-set agg, the broadcast key build, and the returned
-    * plan). Package-visible so `StreamingSpec` audits the real plan. */
+    * one collect of the batch's (subj, pred, obj, bucket) keys →
+    * history scan pruned to the keys' buckets → broadcast left-semi
+    * against the keys as a local relation → broadcast left-anti of the
+    * batch against the surviving intersection. `triples` should be cached
+    * by the caller (it feeds the key collect and the returned plan).
+    * Package-visible so `StreamingSpec` audits the real plan. */
   private[graft] def dedupAgainstPrior(s: SparkSession, triples: DataFrame,
       outPath: String, prior: Seq[String]): DataFrame =
     if (prior.isEmpty) triples
@@ -129,16 +130,19 @@ object DocStream {
       // the schema-inference job a plain read runs every batch.
       val priorAll = s.read.schema(TripleSchema)
         .option("basePath", outPath).parquet(prior: _*)
-      // bounded collect: ≤ DefaultSubjectBuckets ints
-      val batchBuckets = triples
-        .select(TripleSink.bucketOf(col("subj"), Spec.DefaultSubjectBuckets)
-          .as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
+      // one trigger-bounded collect of the batch keys gives both the
+      // bucket set the history scan is pruned to and the semi join's
+      // build side, as a local relation
+      import s.implicits._
+      val keys = triples.select(col("subj"), col("pred"), col("obj"),
+          TripleSink.bucketOf(col("subj"), Spec.DefaultSubjectBuckets))
+        .as[(String, String, String, Int)].collect()
       val dups = priorAll
-        .filter(col("subj_bucket").isin(batchBuckets: _*))
+        .filter(col("subj_bucket").isin(keys.map(_._4).distinct: _*))
         .select("subj", "pred", "obj")
-        .join(broadcast(triples.select("subj", "pred", "obj")),
-          Seq("subj", "pred", "obj"), "left_semi")
+        .join(broadcast(keys.toSeq.map(k => (k._1, k._2, k._3))
+          .toDF("subj", "pred", "obj")), Seq("subj", "pred", "obj"),
+          "left_semi")
       triples.join(broadcast(dups), Seq("subj", "pred", "obj"), "left_anti")
     }
 

@@ -100,6 +100,13 @@ class TripleSinkSpec extends SparkTestBase {
     assertFilesSorted(dir)
   }
 
+  /** bucket → the write task (partition) ids of its files, parsed from
+    * the `part-<partition>-…` file names. */
+  private def bucketTasks(dir: String): Map[String, Seq[Int]] =
+    bucketFiles(dir).groupBy(_.getParentFile.getName).map { case (b, fs) =>
+      b -> fs.map(_.getName.stripPrefix("part-").takeWhile(_ != '-').toInt)
+    }
+
   test("more shuffle partitions than buckets split each bucket's write") {
     // the suite's session runs 4 shuffle partitions
     val plain, split = freshDir()
@@ -109,9 +116,13 @@ class TripleSinkSpec extends SparkTestBase {
     spark.conf.set(conf, "16")
     try TripleSink.writeTriples(spark, triples, split, buckets = 4)
     finally spark.conf.set(conf, before)
-    assert(bucketFiles(plain).size == 4, "one write task per bucket")
-    assert(bucketFiles(split).size > 4, "16 partitions over 4 buckets " +
-      "must spread a bucket over several write tasks")
+    for ((dir, perBucket) <- Seq(plain -> 1, split -> 4)) {
+      val tasks = bucketTasks(dir)
+      assert(tasks.size == 4 && tasks.values.forall(_.size == perBucket),
+        s"$perBucket file(s) per bucket: $tasks")
+      val all = tasks.values.flatten.toSeq
+      assert(all.distinct.size == all.size, s"a task wrote two buckets: $tasks")
+    }
     assertFilesSorted(split)
     assert(TripleSink.readManifest(split).sortBy(_.bucket) ==
       TripleSink.readManifest(plain).sortBy(_.bucket))
@@ -127,14 +138,14 @@ class TripleSinkSpec extends SparkTestBase {
     assert(TripleSink.readManifest(dir).sortBy(_.bucket) == empty)
   }
 
-  /** Executed plans (tree strings, cached relations included) of the SQL
-    * actions `body` runs. Listener calls are asynchronous, so a marker
-    * query closes the window. */
-  private def executedPlans(body: => Unit): Seq[String] = {
-    val plans = new ConcurrentLinkedQueue[String]()
+  /** The executions (with their executed plans as tree strings, cached
+    * relations included) of the SQL actions `body` runs. Listener calls
+    * are asynchronous, so a marker query closes the window. */
+  private def executions(body: => Unit): Seq[(QueryExecution, String)] = {
+    val plans = new ConcurrentLinkedQueue[(QueryExecution, String)]()
     val listener = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan.toString)
+        plans.add(qe -> qe.executedPlan.toString)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
@@ -142,19 +153,22 @@ class TripleSinkSpec extends SparkTestBase {
       body
       spark.range(1).select(lit(1).as("plans_end")).collect()
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!plans.asScala.exists(_.contains("plans_end")) &&
+      while (!plans.asScala.exists(_._2.contains("plans_end")) &&
         System.nanoTime() < deadline) Thread.sleep(20)
     } finally spark.listenerManager.unregister(listener)
     plans.asScala.toSeq
   }
 
+  private def executedPlans(body: => Unit): Seq[String] =
+    executions(body).map(_._2)
+
   /** Plan lines of a filter on the bucket column: on the named column
     * (`subj_bucket#<id> IN (…)`), or, where the optimizer inlines the
-    * column and pushes the filter into each union branch,
-    * `cast(pmod(xxhash64(<branch subj>, 42), buckets) as int) IN (…)`. */
+    * column and pushes the filter below the projection that makes subj,
+    * `pmod(hash(<subj expression>, 42), buckets) IN (…)`. */
   private def bucketFilters(plans: Seq[String]): Seq[String] = {
     val bucket = (s"(subj_bucket#\\d+|42\\), ${Spec.DefaultSubjectBuckets}" +
-      "\\) as int\\)) (IN|INSET) ").r
+      "\\)) (IN|INSET) ").r
     plans.flatMap(_.linesIterator)
       .filter(l => l.contains("Filter") && bucket.findFirstIn(l).nonEmpty)
   }
@@ -178,6 +192,43 @@ class TripleSinkSpec extends SparkTestBase {
       freshDir(), onlyBuckets = Some(Set(0, 1, 2))))
     assert(bucketFilters(partial).nonEmpty,
       "an onlyBuckets write must filter to its buckets")
+  }
+
+  test("the pipeline's triples reach the write through one exchange") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val docsDir = freshDir()
+    InterleavedDocs.synthesize(spark, 200L, seed = 21L)
+      .write.mode("overwrite").parquet(docsDir)
+    val docs = InterleavedDocs.readDocs(spark, docsDir)
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // at another bucket count the write keeps its own exchange
+    for (atScale <- Seq(false, true);
+         (buckets, exchanges) <- Seq(Spec.DefaultSubjectBuckets -> 1, 8 -> 2)) {
+      val df = Pipeline.triples(spark, docs, atScale = atScale)
+      val dir = freshDir()
+      val writes = executions(TripleSink.writeTriples(spark, df, dir,
+        buckets)).flatMap(e => aqe.collect(e._1.executedPlan) {
+          case w: DataWritingCommandExec => w })
+      assert(writes.size == 1, s"atScale=$atScale: ${writes.size} writes")
+      val plan = writes.head
+      val scans = aqe.collect(plan) { case f: FileSourceScanExec => f }
+      val shuffles = aqe.collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(scans.size == 1 && shuffles.size == exchanges,
+        s"atScale=$atScale, $buckets buckets: ${scans.size} scans, " +
+          s"${shuffles.size} shuffles (want $exchanges):\n$plan")
+      val back = TripleSink.readTriples(spark, dir)
+        .select("subj", "pred", "obj", "obj_type")
+      assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty,
+        s"atScale=$atScale, $buckets buckets: table differs from the triples")
+      assert(TripleSink.readManifest(dir).sortBy(_.bucket) ==
+        diskLineage(dir, buckets), "manifest lineage must equal the files")
+      val tasks = bucketTasks(dir)
+      assert(tasks.size == buckets && tasks.values.forall(_.size == 1),
+        s"one file per bucket: $tasks")
+    }
   }
 
   test("resume on a complete table is a no-op") {
